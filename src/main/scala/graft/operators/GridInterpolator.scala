@@ -1,13 +1,15 @@
 package graft.operators
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{array, coalesce, col, collect_list,
-  count, explode, floor, least, lit, monotonically_increasing_id, pmod,
-  round, struct, sum, when}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{array, coalesce, col, count,
+  element_at, explode, floor, greatest, least, lit,
+  monotonically_increasing_id, pmod, round, struct, sum, typedLit, when}
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType,
+  LongType, StructField, StructType}
 import graft.core.{Axis, Bicubic, Boundary, Interpolate}
+import scala.collection.immutable.ListMap
 
 /** Dense 2-D grid (x-major storage) + its axes — the broadcastable analog
   * of the reference Grid2D (`/root/reference/cxx/include/pyinterp/pybind/
@@ -35,7 +37,6 @@ final case class Grid3D(xAxis: Axis, yAxis: Axis, zAxis: Axis,
                         values: Array[Double]) extends Serializable {
   @inline def apply(i: Int, j: Int, k: Int): Double =
     values((i.toLong * yAxis.size * zAxis.size + j.toLong * zAxis.size + k).toInt)
-  def plane(k: Int): (Int, Int) => Double = (i, j) => apply(i, j, k)
 }
 
 /** 4-D grid (x, y, z, u) — u typically a level axis, z possibly temporal
@@ -46,24 +47,6 @@ final case class Grid4D(xAxis: Axis, yAxis: Axis, zAxis: Axis, uAxis: Axis,
   @inline def apply(i: Int, j: Int, k: Int, l: Int): Double =
     values((((i.toLong * yAxis.size + j) * zAxis.size + k) *
       uAxis.size + l).toInt)
-  /** 3-D sub-grid at u index l. */
-  def cube(l: Int): Grid3D = {
-    val vals = new Array[Double](xAxis.size * yAxis.size * zAxis.size)
-    var i = 0
-    while (i < xAxis.size) {
-      var j = 0
-      while (j < yAxis.size) {
-        var k = 0
-        while (k < zAxis.size) {
-          vals((i * yAxis.size + j) * zAxis.size + k) = apply(i, j, k, l)
-          k += 1
-        }
-        j += 1
-      }
-      i += 1
-    }
-    Grid3D(xAxis, yAxis, zAxis, vals)
-  }
 }
 
 /** Grid interpolation as a shuffle-free map stage: the grid is broadcast
@@ -132,24 +115,389 @@ object GridInterpolator {
   private def withStableId(df: DataFrame): DataFrame =
     df.withColumn("_rid", monotonically_increasing_id()).localCheckpoint()
 
-  /** Axis-role + value-column resolution shared by the grid-as-table
-    * paths: only the O(nx + ny) distinct axis values reach the driver.
+  /** One lattice axis of a grid-as-table call, in (x, y, z, u) order: the
+    * probe's coordinate column, the lattice table's coordinate column, the
+    * axis resolved from the table's distinct values, and its period (the
+    * lon-periodic x axis; 0 = not periodic).
     */
-  private def resolveGrid2dTable(gridTable: DataFrame, valueCol: String)
-      : (String, String, String, Axis, Axis) = {
+  private final case class TableAxis(probeCol: String, tableCol: String,
+                                     axis: Axis, period: Double) {
+    def periodic: Boolean = period != 0.0
+  }
+
+  // per-axis internal column names, x first: lattice key, normalized
+  // coordinate, fractional index, bracketing lower node, bracket fraction
+  private val KeyCols = Seq("_ci", "_cj", "_ck", "_cl")
+  private val CoordCols = Seq("_nx", "_ny", "_nz", "_nu")
+  private val FracCols = Seq("_fx", "_fy", "_fz", "_fu")
+  private val LowCols = Seq("_i0", "_j0", "_k0", "_l0")
+  private val FracTCols = Seq("_tx", "_ty", "_tz", "_tu")
+
+  /** The 2^rank bracket corners as per-axis 0/1 offsets, x outermost —
+    * the enumeration order of the corner rows and of the weight product.
+    */
+  private def cornerOffsets(rank: Int): Seq[Seq[Int]] =
+    (0 until (1 << rank)).map(c =>
+      (0 until rank).map(d => (c >> (rank - 1 - d)) & 1))
+
+  /** Encoder of the non-null rows the irregular-axis flatMaps emit. */
+  private def rowEncoder(fields: Seq[(String, DataType)])
+      : ExpressionEncoder[Row] =
+    ExpressionEncoder(RowEncoder.encoderFor(StructType(fields.map {
+      case (n, t) => StructField(n, t, nullable = false) })))
+
+  /** Axis roles, value column and shape checks of the grid-as-table paths:
+    * lon/lat from CF/name heuristics, z from `zColName` (or the time
+    * role), u from `uColName` (the 4th axis has no universal naming
+    * convention — callers must name it), value = the first remaining
+    * column. Only the O(Σ axis sizes) distinct axis values reach the
+    * driver. `planeNodes` is the minimum x/y axis length (2·halfWindow on
+    * the windowed paths). A nonzero `xPeriod` declares a GLOBAL
+    * lon-periodic lattice, which must be regular and close the circle
+    * (nx·step = period).
+    */
+  private def resolveTable(caller: String, gridTable: DataFrame,
+                           probeCols: Seq[String], zColName: String,
+                           uColName: String, valueCol: String,
+                           xPeriod: Double, planeNodes: Int)
+      : (Seq[TableAxis], String) = {
     import graft.sources.GridLoader
+    val rank = probeCols.size
     val roles = GridLoader.identifyAxes(gridTable)
     val lonCol = roles.lon.getOrElse(
       throw new IllegalArgumentException("no longitude/x axis identified"))
     val latCol = roles.lat.getOrElse(
       throw new IllegalArgumentException("no latitude/y axis identified"))
+    val zName =
+      if (rank < 3 || zColName.nonEmpty) zColName
+      else roles.time.getOrElse(
+        throw new IllegalArgumentException("no time/z axis identified"))
+    if (rank == 4) require(uColName.nonEmpty,
+      s"$caller: name the 4th axis column via uColName")
+    val tableCols = Seq(lonCol, latCol, zName, uColName).take(rank)
     val vCol =
       if (valueCol.nonEmpty) valueCol
       else gridTable.schema.fields.map(_.name)
-        .filterNot(n => n == lonCol || n == latCol).headOption
+        .filterNot(tableCols.contains).headOption
         .getOrElse(throw new IllegalArgumentException("no value column"))
-    val Seq(xAxis, yAxis) = GridLoader.axesOf(gridTable, Seq(lonCol, latCol))
-    (lonCol, latCol, vCol, xAxis, yAxis)
+    val axes = GridLoader.axesOf(gridTable, tableCols)
+    require(axes.forall(a =>
+      a.size >= 2 && !a.isPeriodic && a.front < a.back),
+      s"$caller requires ascending non-periodic axes of >= 2 nodes")
+    require(axes.take(2).forall(_.size >= planeNodes),
+      s"$caller requires >= 2*halfWindow nodes per plane axis")
+    val periodic = xPeriod != 0.0
+    if (periodic) {
+      val x = axes.head
+      require(axes.forall(_.isRegular),
+        "xPeriod requires a regular full-circle lattice")
+      require(math.abs(x.size * x.step - xPeriod) <= 1e-6 * x.step,
+        s"xPeriod=$xPeriod requires a full-circle lattice: nx*step = " +
+          s"${x.size * x.step}")
+    }
+    val tableAxes = probeCols.indices.map(d => TableAxis(probeCols(d),
+      tableCols(d), axes(d), if (d == 0) xPeriod else 0.0))
+    (tableAxes, vCol)
+  }
+
+  /** The lattice as `(_ci, _cj[, _ck[, _cl]], _z)` rows keyed by integer
+    * node indices. Regular lattices key by the affine round((c − front) /
+    * step) — pure column arithmetic, fully codegen. Irregular ones
+    * broadcast the axis value arrays (O(Σ axis sizes), the d-th root of
+    * the lattice) and key by the nearest-index `Axis.findIndex`; rows off
+    * the axes are dropped.
+    */
+  private def cellKeys(spark: SparkSession, gridTable: DataFrame,
+                       axes: Seq[TableAxis], vCol: String,
+                       regular: Boolean): DataFrame = {
+    val rank = axes.size
+    if (regular)
+      gridTable.select(axes.indices.map { d =>
+        val a = axes(d).axis
+        round((col(axes(d).tableCol).cast("double") - lit(a.front)) /
+          lit(a.step)).cast("int").as(KeyCols(d))
+      } :+ col(vCol).cast("double").as("_z"): _*)
+    else {
+      val bcAxes = spark.sparkContext.broadcast(axes.map(_.axis).toArray)
+      gridTable.select(axes.map(a => col(a.tableCol).cast("double")) :+
+          col(vCol).cast("double"): _*)
+        .flatMap { r =>
+          val ax = bcAxes.value
+          val key = Array.tabulate(rank)(d =>
+            ax(d).findIndex(r.getDouble(d), bounded = false))
+          if (key.forall(_ >= 0))
+            Iterator.single(Row.fromSeq(key.toSeq :+ r.getDouble(rank)))
+          else Iterator.empty
+        }(rowEncoder(KeyCols.take(rank).map(_ -> IntegerType) :+
+          ("_z" -> DoubleType)))
+    }
+  }
+
+  /** Regular-lattice probe brackets as pure column arithmetic, with
+    * `Axis.findIndexes`' semantics decided against the node VALUES: per
+    * axis the coordinate `_n?` (periodic x shifted into [front,
+    * front + period) by whole periods, like `Axis.normalize`), the fractional
+    * index `_f?` = (`_n?` − front)/step and the lower bracketing node
+    * `_?0` — the side of the nearest node the coordinate lies on, and a
+    * coordinate exactly on a node brackets that node and the next one
+    * (the last node: the previous one). Node-exact probes thus see the
+    * broadcast kernel's cells and windows however (c − front)/step
+    * rounds; periodic x past the last node brackets (nx-1, wrap-to-0).
+    * Returns the bracketed probes and their frame condition front <= c
+    * <= back, which periodic x never rejects.
+    */
+  private def regularBrackets(withId: DataFrame, axes: Seq[TableAxis])
+      : (DataFrame, Column) = {
+    // one projection per quantity, all axes at once (x first)
+    def perAxis(name: Seq[String])(f: Int => Column) =
+      ListMap(axes.indices.map(d => name(d) -> f(d)): _*)
+    val bracketed = withId
+      .withColumns(perAxis(CoordCols) { d =>
+        val c = col(axes(d).probeCol).cast("double")
+        if (!axes(d).periodic) c
+        else {
+          val front = lit(axes(d).axis.front)
+          val p = lit(axes(d).period)
+          val shifted = c - p * floor((c - front) / p)
+          when(shifted >= front + p, shifted - p)
+            .when(shifted < front, shifted + p).otherwise(shifted)
+        }
+      })
+      .withColumns(perAxis(FracCols) { d =>
+        (col(CoordCols(d)) - lit(axes(d).axis.front)) / lit(axes(d).axis.step)
+      })
+      .withColumns(perAxis(LowCols) { d =>
+        val n = axes(d).axis.size
+        val c = col(CoordCols(d))
+        val nearest = least(greatest(floor(col(FracCols(d)) + 0.5), lit(0L)),
+          lit(n - 1L)).cast("int")
+        val node = element_at(typedLit(axes(d).axis.values), nearest + 1)
+        when(c === node, least(nearest, lit(n - 2)))
+          .when(c < node, nearest - 1).otherwise(nearest)
+      })
+    val frame = axes.indices.filterNot(axes(_).periodic).map { d =>
+      col(CoordCols(d)) >= lit(axes(d).axis.front) &&
+        col(CoordCols(d)) <= lit(axes(d).axis.back)
+    }.reduce(_ && _)
+    (bracketed, frame)
+  }
+
+  /** Irregular-lattice probe brackets of a `(_rid, c_x, c_y, ...)` row:
+    * per axis (lo, hi, t) from the SAME `Axis.findIndexes` binary search
+    * and (c − c0)/(c1 − c0) fraction as the broadcast kernels
+    * (`container.hpp:383-404` lower_bound semantics), so table ≡
+    * broadcast on irregular lattices too. None when any axis cannot frame
+    * the probe.
+    */
+  private def irregularBrackets(ax: Array[Axis], r: Row)
+      : Option[Array[(Int, Int, Double)]] = {
+    val out = new Array[(Int, Int, Double)](ax.length)
+    var d = 0
+    while (d < ax.length) {
+      val c = r.getDouble(d + 1)
+      ax(d).findIndexes(c) match {
+        case Some((lo, hi)) =>
+          val c0 = ax(d)(lo); val c1 = ax(d)(hi)
+          out(d) = (lo, hi, if (c1 == c0) 0.0 else (c - c0) / (c1 - c0))
+        case None => return None
+      }
+      d += 1
+    }
+    Some(out)
+  }
+
+  /** `(_rid, c_x, c_y, ...)`: the rows the irregular-axis paths read. */
+  private def probeCoords(withId: DataFrame, axes: Seq[TableAxis])
+      : DataFrame =
+    withId.select(
+      col("_rid") +: axes.map(a => col(a.probeCol).cast("double")): _*)
+
+  /** Attaches the interpolated `(_rid, _v)` rows to the probes; probes
+    * without a value (unframed, or a masked/missing cell) get NaN.
+    */
+  private def attach(withId: DataFrame, vals: DataFrame,
+                     outputCol: String): DataFrame =
+    withId.join(vals, Seq("_rid"), "left")
+      .withColumn(outputCol, coalesce(col("_v"), lit(Double.NaN)))
+      .drop("_rid", "_v")
+
+  /** Rank-generic GEOMETRIC grid-as-table interpolation (multilinear over
+    * the 2^rank bracketing lattice corners): each probe row fans out to
+    * its corners with weights Π (1 − t | t) multiplied x first, a shuffle
+    * equi-join on the corner key pulls the corner values from the cell
+    * table, and a groupBy reassembles sum(w·z) — two keyed shuffles, no
+    * driver state, AQE-skew-safe. The `_n === 2^rank` check NaNs a probe
+    * with a masked (absent) corner cell, like the dense grid's NaN cells.
+    * Periodic x: the seam cell's right corners wrap to lattice column 0
+    * (`findIndexes` wrap, `axis.hpp:722-778`).
+    */
+  private def cornerTable(caller: String, spark: SparkSession,
+                          probe: DataFrame, probeCols: Seq[String],
+                          gridTable: DataFrame, zColName: String,
+                          uColName: String, valueCol: String,
+                          outputCol: String, xPeriod: Double): DataFrame = {
+    val (axes, vCol) = resolveTable(caller, gridTable, probeCols, zColName,
+      uColName, valueCol, xPeriod, planeNodes = 2)
+    val rank = axes.size
+    val keys = KeyCols.take(rank)
+    val regular = axes.forall(_.axis.isRegular)
+    val withId = withStableId(probe)
+    val cells = cellKeys(spark, gridTable, axes, vCol, regular)
+    val corners =
+      if (regular) {
+        val (bracketed, frame) = regularBrackets(withId, axes)
+        val p = bracketed.filter(frame).withColumns(ListMap(axes.indices.map(
+          d => FracTCols(d) -> (col(FracCols(d)) - col(LowCols(d)))): _*))
+        val cornerStructs = cornerOffsets(rank).map { offs =>
+          val keyCols = axes.indices.map { d =>
+            val c =
+              if (offs(d) == 0) col(LowCols(d)) else col(LowCols(d)) + offs(d)
+            (if (axes(d).periodic) pmod(c, lit(axes(d).axis.size)) else c)
+              .as(keys(d))
+          }
+          val w = axes.indices.map { d =>
+            val t = col(FracTCols(d))
+            if (offs(d) == 1) t else lit(1.0) - t
+          }.reduceLeft(_ * _)
+          struct(keyCols :+ w.as("_w"): _*)
+        }
+        p.select(col("_rid"), explode(array(cornerStructs: _*)).as("_c"))
+          .select(col("_rid") +:
+            (keys :+ "_w").map(k => col(s"_c.$k").as(k)): _*)
+      } else {
+        val bcAxes = spark.sparkContext.broadcast(axes.map(_.axis).toArray)
+        val offsets = cornerOffsets(rank)
+        probeCoords(withId, axes)
+          .flatMap { r =>
+            irregularBrackets(bcAxes.value, r) match {
+              case Some(br) =>
+                val rid = r.getLong(0)
+                offsets.iterator.map { offs =>
+                  val key = offs.indices.map(d =>
+                    if (offs(d) == 1) br(d)._2 else br(d)._1)
+                  val w = offs.indices.map { d =>
+                    if (offs(d) == 1) br(d)._3 else 1 - br(d)._3
+                  }.reduceLeft(_ * _)
+                  Row.fromSeq((rid +: key) :+ w)
+                }
+              case None => Iterator.empty
+            }
+          }(rowEncoder((("_rid" -> LongType) +:
+            keys.map(_ -> IntegerType)) :+ ("_w" -> DoubleType)))
+      }
+    val agg = corners.join(cells, keys)
+      .groupBy("_rid")
+      .agg(sum(col("_w") * col("_z")).as("_v"), count(lit(1)).as("_n"))
+      .select(col("_rid"),
+        when(col("_n") === (1 << rank), col("_v")).otherwise(lit(Double.NaN))
+          .as("_v"))
+    attach(withId, agg, outputCol)
+  }
+
+  /** Rank-generic WINDOWED grid-as-table interpolation: probes are keyed
+    * by window origin `(wi, wj)` — the x/y bracket minus (halfWindow − 1)
+    * — and by the lower z/u bracketing plane `(k0, l0)` with its combine
+    * fraction `(tz, tu)`, then [[WindowedTileJoin]] co-groups them with
+    * the lattice cells by window tile and evaluates plane-wise with the
+    * broadcast path's kernels. The frame rule mirrors `Axis.window` with
+    * boundary `undef`: probes whose window leaves the lattice never reach
+    * the join and surface as NaN. Periodic probes evaluate at the
+    * UNWRAPPED window coordinate front + fx·step (fx − wi ≈
+    * halfWindow−1 + tx, always inside the unwrapped window frame) over
+    * affine window nodes; non-periodic probes evaluate at the raw x over
+    * the axis VALUES, like the broadcast window.
+    */
+  private def windowedTable(caller: String, spark: SparkSession,
+                            probe: DataFrame, probeCols: Seq[String],
+                            gridTable: DataFrame, method: String,
+                            zMethod: String, uMethod: String,
+                            halfWindow: Int, zColName: String,
+                            uColName: String, valueCol: String,
+                            outputCol: String, xPeriod: Double): DataFrame = {
+    import spark.implicits._
+    require(!geometricMethods.contains(method),
+      s"method $method is geometric — use ${caller.stripSuffix("Windowed")}")
+    require(halfWindow >= 1, "halfWindow must be >= 1")
+    val (axes, vCol) = resolveTable(caller, gridTable, probeCols, zColName,
+      uColName, valueCol, xPeriod, planeNodes = 2 * halfWindow)
+    val rank = axes.size
+    val n = 2 * halfWindow
+    val tXY = WindowedTileJoin.DefaultTileXY
+    val tPl = WindowedTileJoin.DefaultTilePlane
+    val Seq(xAxis, yAxis) = axes.take(2).map(_.axis)
+    val sizes = axes.map(_.axis.size).padTo(4, 0)
+    val periodic = axes.head.periodic
+    val regular = axes.forall(_.axis.isRegular)
+    val withId = withStableId(probe)
+    val cells = cellKeys(spark, gridTable, axes, vCol, regular)
+    val probesT =
+      if (regular) {
+        val (bracketed, frame) = regularBrackets(withId, axes)
+        val p = bracketed.withColumns(ListMap(
+          "_wi" -> (col("_i0") - lit(halfWindow - 1)),
+          "_wj" -> (col("_j0") - lit(halfWindow - 1))))
+        // the window [i0-(hw-1), i0+hw] stays on the axis iff
+        // values(hw-1) <= c < values(size-hw) (or c <= back for hw = 1):
+        // the bracket's node rule restated on the coordinate, so the
+        // filter needs no node lookup
+        def windowFits(d: Int) = {
+          val a = axes(d).axis
+          val c = col(CoordCols(d))
+          if (halfWindow == 1) lit(true)
+          else c >= lit(a(halfWindow - 1)) && c < lit(a(a.size - halfWindow))
+        }
+        val windowFrame =
+          if (periodic) windowFits(1) else windowFits(0) && windowFits(1)
+        val xEval =
+          if (periodic) lit(xAxis.front) + col("_fx") * lit(xAxis.step)
+          else col(axes(0).probeCol).cast("double")
+        def tile(c: Column, t: Int) = floor(c / lit(t)).cast("int")
+        def low(d: Int) = if (d < rank) col(LowCols(d)) else lit(0)
+        def frac(d: Int) =
+          if (d < rank) col(FracCols(d)) - col(LowCols(d)) else lit(0.0)
+        p.filter(frame && windowFrame).select(
+            tile(col("_wi"), tXY).as("tx"), tile(col("_wj"), tXY).as("ty"),
+            tile(low(2), tPl).as("tk"), tile(low(3), tPl).as("tl"),
+            col("_rid").as("rid"), xEval.as("x"),
+            col(axes(1).probeCol).cast("double").as("y"),
+            frac(2).as("tz"), frac(3).as("tu"),
+            col("_wi").as("wi"), col("_wj").as("wj"),
+            low(2).as("k0"), low(3).as("l0"))
+          .as[TileProbe]
+      } else {
+        val bcAxes = spark.sparkContext.broadcast(axes.map(_.axis).toArray)
+        val hw = halfWindow
+        probeCoords(withId, axes)
+          .flatMap { r =>
+            irregularBrackets(bcAxes.value, r) match {
+              case Some(br) =>
+                val wi = br(0)._1 - (hw - 1)
+                val wj = br(1)._1 - (hw - 1)
+                if (wi >= 0 && wi + (n - 1) <= sizes(0) - 1 &&
+                    wj >= 0 && wj + (n - 1) <= sizes(1) - 1) {
+                  def low(d: Int) = if (d < rank) br(d)._1 else 0
+                  def frac(d: Int) = if (d < rank) br(d)._3 else 0.0
+                  Iterator.single(TileProbe(Math.floorDiv(wi, tXY),
+                    Math.floorDiv(wj, tXY), Math.floorDiv(low(2), tPl),
+                    Math.floorDiv(low(3), tPl), r.getLong(0), r.getDouble(1),
+                    r.getDouble(2), frac(2), frac(3), wi, wj, low(2), low(3)))
+                } else Iterator.empty
+              case None => Iterator.empty
+            }
+          }
+      }
+    val cellsT = WindowedTileJoin.fanOutCells(spark, cells, arity = rank,
+      n = n, halfWindow = halfWindow, tileXY = tXY, tilePlane = tPl,
+      nx = sizes(0), ny = sizes(1), nz = sizes(2), nu = sizes(3),
+      periodicX = periodic)
+    val vals = WindowedTileJoin.evaluate(spark, probesT, cellsT,
+      arity = rank, method = method, zMethod = zMethod, uMethod = uMethod,
+      n = n, tileXY = tXY, tilePlane = tPl,
+      xFront = xAxis.front, xStep = xAxis.step,
+      yFront = yAxis.front, yStep = yAxis.step,
+      xVals = if (periodic) null else xAxis.values,
+      yVals = yAxis.values)
+    attach(withId, vals, outputCol)
   }
 
   /** Grid-as-table bilinear interpolation — the big-grid path (SURVEY
@@ -157,338 +505,60 @@ object GridInterpolator {
     * 48-97` over grids the reference memory-maps,
     * `pyinterp/backends/xarray.py:582-688`): the lattice is NEVER
     * collected or broadcast. Axis roles are inferred like `GridLoader`;
-    * only the O(nx + ny) distinct axis values reach the driver. Each probe
-    * row fans out to its 4 bracketing corners (pure column arithmetic), a
-    * shuffle equi-join on the (ix, iy) corner key pulls the corner values
-    * from the cell table, and a groupBy reassembles sum(w·z) — two keyed
-    * shuffles, no driver state, AQE-skew-safe. Probes outside the axes, or
-    * probes with a masked/missing corner cell, yield NaN — the broadcast
-    * path's semantics.
+    * only the O(nx + ny) distinct axis values reach the driver. Probes
+    * outside the axes, or probes with a masked/missing corner cell, yield
+    * NaN — the broadcast path's semantics.
     *
     * Accepts regular ascending axes (pure column-arithmetic cell keys),
-    * IRREGULAR ascending axes (the axis value arrays — O(nx + ny), the
-    * d-th root of the lattice — are broadcast and the bracket comes from
-    * the same `Axis.findIndexes` binary search as the broadcast kernel;
-    * the join plan is identical), and a GLOBAL lon-periodic lattice —
-    * the single most common huge grid — declared by `xPeriod`
-    * (e.g. 360.0): the lattice must cover the full circle
-    * (nx·step = period), probe coordinates normalize into the period
-    * (`math/axis.hpp:294-333` semantics), the x bracket never rejects,
-    * and the seam cell's right corners wrap to lattice column 0
-    * (`findIndexes` wrap, `axis.hpp:722-778`).
+    * IRREGULAR ascending axes (broadcast axis value arrays and the same
+    * `Axis.findIndexes` brackets as the broadcast kernel; the join plan
+    * is identical), and a GLOBAL lon-periodic lattice — the single most
+    * common huge grid — declared by `xPeriod` (e.g. 360.0): the lattice
+    * must cover the full circle (nx·step = period), probe coordinates
+    * normalize into the period (`math/axis.hpp:294-333` semantics), the x
+    * bracket never rejects, and the seam cell's right corners wrap to
+    * lattice column 0.
+    *
+    * The six grid-as-table entry points are thin wrappers over one
+    * rank-generic axis-list path (`cornerTable` / `windowedTable`).
     */
   def bivariateTable(spark: SparkSession, probe: DataFrame, xCol: String,
                      yCol: String, gridTable: DataFrame,
                      valueCol: String = "",
                      outputCol: String = "value",
-                     xPeriod: Double = 0.0): DataFrame = {
-    val (lonCol, latCol, vCol, xAxis, yAxis) =
-      resolveGrid2dTable(gridTable, valueCol)
-    require(xAxis.size >= 2 && yAxis.size >= 2 &&
-      !xAxis.isPeriodic && !yAxis.isPeriodic &&
-      xAxis.front < xAxis.back && yAxis.front < yAxis.back,
-      "bivariateTable requires ascending axes of >= 2 nodes")
-    val periodic = xPeriod != 0.0
-    val regular = xAxis.isRegular && yAxis.isRegular
-    require(regular || !periodic,
-      "xPeriod requires a regular full-circle lattice")
-    val nx = xAxis.size
-    if (periodic) require(
-      math.abs(nx * xAxis.step - xPeriod) <= 1e-6 * xAxis.step,
-      s"xPeriod=$xPeriod requires a full-circle lattice: nx*step = " +
-        s"${nx * xAxis.step}")
-
-    val withId = withStableId(probe)
-    val (cells, corners) =
-      if (regular) regularCorners2d(withId, gridTable, xCol, yCol, lonCol,
-        latCol, vCol, xAxis, yAxis, periodic)
-      else irregularCorners2d(spark, withId, gridTable, xCol, yCol, lonCol,
-        latCol, vCol, xAxis, yAxis)
-    // inner corner join + 4-corner completeness check: a masked cell
-    // (absent lattice row) NaNs the probe, like the dense grid's NaN cells
-    val agg = corners.join(cells, Seq("_ci", "_cj"))
-      .groupBy("_rid")
-      .agg(sum(col("_w") * col("_z")).as("_v"), count(lit(1)).as("_n"))
-      .select(col("_rid"),
-        when(col("_n") === 4, col("_v")).otherwise(lit(Double.NaN)).as("_v"))
-    withId.join(agg, Seq("_rid"), "left")
-      .withColumn(outputCol, coalesce(col("_v"), lit(Double.NaN)))
-      .drop("_rid", "_v")
-  }
-
-  /** Regular-axis corner fan-out of [[bivariateTable]]: affine cell keys
-    * and bracket — pure column arithmetic, fully codegen.
-    */
-  private def regularCorners2d(withId: DataFrame, gridTable: DataFrame,
-                               xCol: String, yCol: String, lonCol: String,
-                               latCol: String, vCol: String,
-                               xAxis: Axis, yAxis: Axis, periodic: Boolean)
-      : (DataFrame, DataFrame) = {
-    val nx = xAxis.size
-    // distributed cell table keyed by integer lattice indices
-    val cells = gridTable.select(
-      round((col(lonCol).cast("double") - lit(xAxis.front)) /
-        lit(xAxis.step)).cast("int").as("_ci"),
-      round((col(latCol).cast("double") - lit(yAxis.front)) /
-        lit(yAxis.step)).cast("int").as("_cj"),
-      col(vCol).cast("double").as("_z"))
-    val fxRaw = (col(xCol).cast("double") - lit(xAxis.front)) / lit(xAxis.step)
-    // periodic: normalize into [0, nx) cell units — every x frames
-    val fx = if (periodic) pmod(fxRaw, lit(nx.toDouble)) else fxRaw
-    val fy = (col(yCol).cast("double") - lit(yAxis.front)) / lit(yAxis.step)
-    // right-edge-inclusive bracket (findIndexes semantics); out-of-range
-    // probes emit no corner rows and surface as NaN after the left join.
-    // Periodic x: a probe exactly on the LAST node brackets (nx-2, nx-1)
-    // like findIndexes' delta==0 collapse; past it, (nx-1, wrap-to-0).
-    val i0 =
-      if (periodic)
-        when(col("_fx") === lit((nx - 1).toDouble), lit(nx - 2))
-          .otherwise(floor(col("_fx")).cast("int")).cast("int")
-      else least(floor(col("_fx")).cast("int"), lit(nx - 2))
-    val pAll = withId
-      .withColumn("_fx", fx).withColumn("_fy", fy)
-      .withColumn("_i0", i0)
-      .withColumn("_j0",
-        least(floor(col("_fy")).cast("int"), lit(yAxis.size - 2)))
-      .withColumn("_tx", col("_fx") - col("_i0"))
-      .withColumn("_ty", col("_fy") - col("_j0"))
-    val yFrame = col("_fy") >= 0.0 &&
-      col("_fy") <= lit((yAxis.size - 1).toDouble)
-    val p =
-      if (periodic) pAll.filter(yFrame)
-      else pAll.filter(col("_fx") >= 0.0 &&
-        col("_fx") <= lit((nx - 1).toDouble) && yFrame)
-    // seam wrap of the right corner column (periodic only)
-    def ciOf(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      if (periodic) pmod(c, lit(nx)) else c
-    val corners = p.select(col("_rid"), explode(array(
-        struct(col("_i0").as("_ci"), col("_j0").as("_cj"),
-          ((lit(1.0) - col("_tx")) * (lit(1.0) - col("_ty"))).as("_w")),
-        struct(col("_i0").as("_ci"), (col("_j0") + 1).as("_cj"),
-          ((lit(1.0) - col("_tx")) * col("_ty")).as("_w")),
-        struct(ciOf(col("_i0") + 1).as("_ci"), col("_j0").as("_cj"),
-          (col("_tx") * (lit(1.0) - col("_ty"))).as("_w")),
-        struct(ciOf(col("_i0") + 1).as("_ci"), (col("_j0") + 1).as("_cj"),
-          (col("_tx") * col("_ty")).as("_w")))).as("_c"))
-      .select(col("_rid"), col("_c._ci").as("_ci"), col("_c._cj").as("_cj"),
-        col("_c._w").as("_w"))
-    (cells, corners)
-  }
-
-  /** Irregular-axis corner fan-out of [[bivariateTable]]: the axis value
-    * arrays (O(nx + ny) — the d-th root of the lattice, NOT the lattice)
-    * are broadcast, cell keys come from `Axis.findIndex` and probe
-    * brackets + weights from the SAME `Axis.findIndexes` binary search
-    * and (x − x0)/(x1 − x0) arithmetic as the broadcast geometric kernel
-    * (`container.hpp:383-404` lower_bound semantics) — so table ≡
-    * broadcast on irregular lattices too. The downstream join plan is
-    * byte-identical to the regular path.
-    */
-  private def irregularCorners2d(spark: SparkSession, withId: DataFrame,
-                                 gridTable: DataFrame, xCol: String,
-                                 yCol: String, lonCol: String,
-                                 latCol: String, vCol: String,
-                                 xAxis: Axis, yAxis: Axis)
-      : (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val bcX = spark.sparkContext.broadcast(xAxis)
-    val bcY = spark.sparkContext.broadcast(yAxis)
-    val cells = gridTable.select(col(lonCol).cast("double"),
-        col(latCol).cast("double"), col(vCol).cast("double"))
-      .as[(Double, Double, Double)]
-      .flatMap { case (x, y, z) =>
-        val ci = bcX.value.findIndex(x, bounded = false)
-        val cj = bcY.value.findIndex(y, bounded = false)
-        if (ci >= 0 && cj >= 0) Iterator.single((ci, cj, z))
-        else Iterator.empty
-      }.toDF("_ci", "_cj", "_z")
-    val corners = withId.select(col("_rid"),
-        col(xCol).cast("double").as("_x"), col(yCol).cast("double").as("_y"))
-      .as[(Long, Double, Double)]
-      .flatMap { case (rid, x, y) =>
-        val ax = bcX.value
-        val ay = bcY.value
-        (ax.findIndexes(x), ay.findIndexes(y)) match {
-          case (Some((i0, i1)), Some((j0, j1))) =>
-            val x0 = ax(i0); val x1 = ax(i1)
-            val y0 = ay(j0); val y1 = ay(j1)
-            val tx = if (x1 == x0) 0.0 else (x - x0) / (x1 - x0)
-            val ty = if (y1 == y0) 0.0 else (y - y0) / (y1 - y0)
-            Iterator((rid, i0, j0, (1 - tx) * (1 - ty)),
-              (rid, i0, j1, (1 - tx) * ty),
-              (rid, i1, j0, tx * (1 - ty)),
-              (rid, i1, j1, tx * ty))
-          case _ => Iterator.empty
-        }
-      }.toDF("_rid", "_ci", "_cj", "_w")
-    (cells, corners)
-  }
+                     xPeriod: Double = 0.0): DataFrame =
+    cornerTable("bivariateTable", spark, probe, Seq(xCol, yCol), gridTable,
+      "", "", valueCol, outputCol, xPeriod)
 
   /** 3-D grid-as-table trilinear interpolation: [[bivariateTable]]'s
-    * corner join extended to the 8 bracketing lattice corners (bilinear in
+    * corner join over the 8 bracketing lattice corners (bilinear in
     * (x, y) × linear in z — the geometric trivariate semantics,
     * `pybind/geometric/trivariate.hpp:46-120`). Same scale contract: the
     * lattice never leaves the cluster.
     */
-  /** Axis-role + value-column resolution for the 3-D grid-as-table paths
-    * (shared by [[trivariateTable]] and [[trivariateTableWindowed]]).
-    */
-  private def resolveGrid3dTable(gridTable: DataFrame, zColName: String,
-                                 valueCol: String, caller: String)
-      : (String, String, String, String, Axis, Axis, Axis) = {
-    import graft.sources.GridLoader
-    val roles = GridLoader.identifyAxes(gridTable)
-    val lonCol = roles.lon.getOrElse(
-      throw new IllegalArgumentException("no longitude/x axis identified"))
-    val latCol = roles.lat.getOrElse(
-      throw new IllegalArgumentException("no latitude/y axis identified"))
-    val zName =
-      if (zColName.nonEmpty) zColName
-      else roles.time.getOrElse(
-        throw new IllegalArgumentException("no time/z axis identified"))
-    val vCol =
-      if (valueCol.nonEmpty) valueCol
-      else gridTable.schema.fields.map(_.name)
-        .filterNot(n => n == lonCol || n == latCol || n == zName).headOption
-        .getOrElse(throw new IllegalArgumentException("no value column"))
-    val axes = GridLoader.axesOf(gridTable, Seq(lonCol, latCol, zName))
-    require(axes.forall(a => a.size >= 2 && !a.isPeriodic &&
-      a.front < a.back),
-      s"$caller requires ascending non-periodic axes of >= 2 nodes")
-    (lonCol, latCol, zName, vCol, axes(0), axes(1), axes(2))
-  }
-
   def trivariateTable(spark: SparkSession, probe: DataFrame, xCol: String,
                       yCol: String, zCol: String, gridTable: DataFrame,
                       zColName: String = "", valueCol: String = "",
                       outputCol: String = "value",
-                      xPeriod: Double = 0.0): DataFrame = {
-    val (lonCol, latCol, zName, vCol, xAxis, yAxis, zAxis) =
-      resolveGrid3dTable(gridTable, zColName, valueCol, "trivariateTable")
-    val regular = xAxis.isRegular && yAxis.isRegular && zAxis.isRegular
-    // periodic longitude: [[bivariateTable]]'s seam mechanics — pmod
-    // probe normalization, x frame never rejects, right corners wrap
-    val periodic = xPeriod != 0.0
-    require(regular || !periodic,
-      "xPeriod requires a regular full-circle lattice")
-    val nx = xAxis.size
-    if (periodic) require(
-      math.abs(nx * xAxis.step - xPeriod) <= 1e-6 * xAxis.step,
-      s"xPeriod=$xPeriod requires a full-circle lattice: nx*step = " +
-        s"${nx * xAxis.step}")
+                      xPeriod: Double = 0.0): DataFrame =
+    cornerTable("trivariateTable", spark, probe, Seq(xCol, yCol, zCol),
+      gridTable, zColName, "", valueCol, outputCol, xPeriod)
 
-    val withId = withStableId(probe)
-    val (cells, corners) = if (regular) {
-      val cellsR = gridTable.select(
-        round((col(lonCol).cast("double") - lit(xAxis.front)) /
-          lit(xAxis.step)).cast("int").as("_ci"),
-        round((col(latCol).cast("double") - lit(yAxis.front)) /
-          lit(yAxis.step)).cast("int").as("_cj"),
-        round((col(zName).cast("double") - lit(zAxis.front)) /
-          lit(zAxis.step)).cast("int").as("_ck"),
-        col(vCol).cast("double").as("_z"))
-      def frac(c: String, a: graft.core.Axis) =
-        (col(c).cast("double") - lit(a.front)) / lit(a.step)
-      val fx =
-        if (periodic) pmod(frac(xCol, xAxis), lit(nx.toDouble))
-        else frac(xCol, xAxis)
-      val i0 =
-        if (periodic)
-          when(col("_fx") === lit((nx - 1).toDouble), lit(nx - 2))
-            .otherwise(floor(col("_fx")).cast("int")).cast("int")
-        else least(floor(col("_fx")).cast("int"), lit(nx - 2))
-      val pAll = withId
-        .withColumn("_fx", fx)
-        .withColumn("_fy", frac(yCol, yAxis))
-        .withColumn("_fz", frac(zCol, zAxis))
-        .withColumn("_i0", i0)
-        .withColumn("_j0",
-          least(floor(col("_fy")).cast("int"), lit(yAxis.size - 2)))
-        .withColumn("_k0",
-          least(floor(col("_fz")).cast("int"), lit(zAxis.size - 2)))
-        .withColumn("_tx", col("_fx") - col("_i0"))
-        .withColumn("_ty", col("_fy") - col("_j0"))
-        .withColumn("_tz", col("_fz") - col("_k0"))
-      val yzFrame = col("_fy") >= 0.0 &&
-        col("_fy") <= lit((yAxis.size - 1).toDouble) &&
-        col("_fz") >= 0.0 && col("_fz") <= lit((zAxis.size - 1).toDouble)
-      val p =
-        if (periodic) pAll.filter(yzFrame)
-        else pAll.filter(col("_fx") >= 0.0 &&
-          col("_fx") <= lit((nx - 1).toDouble) && yzFrame)
-      // seam wrap of the right corner column (periodic only)
-      def ciOf(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        if (periodic) pmod(c, lit(nx)) else c
-      val cornerStructs =
-        for (di <- 0 to 1; dj <- 0 to 1; dk <- 0 to 1) yield {
-          def w(t: org.apache.spark.sql.Column, d: Int) =
-            if (d == 1) t else lit(1.0) - t
-          struct(ciOf(col("_i0") + di).as("_ci"),
-            (col("_j0") + dj).as("_cj"),
-            (col("_k0") + dk).as("_ck"),
-            (w(col("_tx"), di) * w(col("_ty"), dj) * w(col("_tz"), dk))
-              .as("_w"))
-        }
-      val cornersR = p.select(col("_rid"),
-          explode(array(cornerStructs: _*)).as("_c"))
-        .select(col("_rid"), col("_c._ci").as("_ci"),
-          col("_c._cj").as("_cj"), col("_c._ck").as("_ck"),
-          col("_c._w").as("_w"))
-      (cellsR, cornersR)
-    } else {
-      // IRREGULAR ascending axes: broadcast axis arrays + the broadcast
-      // kernel's findIndexes brackets — the 3-D analog of the 2-D
-      // irregular corner fan-out; the join plan is unchanged
-      import spark.implicits._
-      val bcX = spark.sparkContext.broadcast(xAxis)
-      val bcY = spark.sparkContext.broadcast(yAxis)
-      val bcZ = spark.sparkContext.broadcast(zAxis)
-      val cellsI = gridTable.select(col(lonCol).cast("double"),
-          col(latCol).cast("double"), col(zName).cast("double"),
-          col(vCol).cast("double"))
-        .as[(Double, Double, Double, Double)]
-        .flatMap { case (x, y, z, v) =>
-          val ci = bcX.value.findIndex(x, bounded = false)
-          val cj = bcY.value.findIndex(y, bounded = false)
-          val ck = bcZ.value.findIndex(z, bounded = false)
-          if (ci >= 0 && cj >= 0 && ck >= 0)
-            Iterator.single((ci, cj, ck, v))
-          else Iterator.empty
-        }.toDF("_ci", "_cj", "_ck", "_z")
-      val cornersI = withId.select(col("_rid"),
-          col(xCol).cast("double").as("_x"),
-          col(yCol).cast("double").as("_y"),
-          col(zCol).cast("double").as("_zq"))
-        .as[(Long, Double, Double, Double)]
-        .flatMap { case (rid, x, y, z) =>
-          (bcX.value.findIndexes(x), bcY.value.findIndexes(y),
-            bcZ.value.findIndexes(z)) match {
-            case (Some((i0, i1)), Some((j0, j1)), Some((k0, k1))) =>
-              val ax = bcX.value; val ay = bcY.value; val az = bcZ.value
-              def tOf(v: Double, lo: Double, hi: Double) =
-                if (hi == lo) 0.0 else (v - lo) / (hi - lo)
-              val tx = tOf(x, ax(i0), ax(i1))
-              val ty = tOf(y, ay(j0), ay(j1))
-              val tz = tOf(z, az(k0), az(k1))
-              for {
-                (ci, wx) <- Iterator((i0, 1 - tx), (i1, tx))
-                (cj, wy) <- Iterator((j0, 1 - ty), (j1, ty))
-                (ck, wz) <- Iterator((k0, 1 - tz), (k1, tz))
-              } yield (rid, ci, cj, ck, wx * wy * wz)
-            case _ => Iterator.empty
-          }
-        }.toDF("_rid", "_ci", "_cj", "_ck", "_w")
-      (cellsI, cornersI)
-    }
-    val agg = corners.join(cells, Seq("_ci", "_cj", "_ck"))
-      .groupBy("_rid")
-      .agg(sum(col("_w") * col("_z")).as("_v"), count(lit(1)).as("_n"))
-      .select(col("_rid"),
-        when(col("_n") === 8, col("_v")).otherwise(lit(Double.NaN)).as("_v"))
-    withId.join(agg, Seq("_rid"), "left")
-      .withColumn(outputCol, coalesce(col("_v"), lit(Double.NaN)))
-      .drop("_rid", "_v")
-  }
+  /** 4-D grid-as-table QUADRILINEAR interpolation: [[bivariateTable]]'s
+    * corner join over the 16 bracketing lattice corners (the geometric
+    * quadrivariate semantics, `pybind/geometric/quadrivariate.hpp`). The
+    * 4th axis column must be named via `uColName`.
+    */
+  def quadrivariateTable(spark: SparkSession, probe: DataFrame,
+                         xCol: String, yCol: String, zCol: String,
+                         uCol: String, gridTable: DataFrame,
+                         zColName: String = "", uColName: String = "",
+                         valueCol: String = "",
+                         outputCol: String = "value",
+                         xPeriod: Double = 0.0): DataFrame =
+    cornerTable("quadrivariateTable", spark, probe,
+      Seq(xCol, yCol, zCol, uCol), gridTable, zColName, uColName, valueCol,
+      outputCol, xPeriod)
 
   /** Grid-as-table WINDOWED interpolation (r3 VERDICT item 1): bicubic /
     * spline_bilinear / the separable univariate family over a lattice too
@@ -530,161 +600,24 @@ object GridInterpolator {
                              halfWindow: Int = 3,
                              valueCol: String = "",
                              outputCol: String = "value",
-                             xPeriod: Double = 0.0): DataFrame = {
-    require(!geometricMethods.contains(method),
-      s"method $method is geometric — use bivariateTable")
-    require(halfWindow >= 1, "halfWindow must be >= 1")
-    val n = 2 * halfWindow
-    val (lonCol, latCol, vCol, xAxis, yAxis) =
-      resolveGrid2dTable(gridTable, valueCol)
-    require(xAxis.size >= n && yAxis.size >= n &&
-      !xAxis.isPeriodic && !yAxis.isPeriodic &&
-      xAxis.front < xAxis.back && yAxis.front < yAxis.back,
-      "bivariateTableWindowed requires ascending axes of >= " +
-        "2*halfWindow nodes")
-    val periodic = xPeriod != 0.0
-    val regular = xAxis.isRegular && yAxis.isRegular
-    require(regular || !periodic,
-      "xPeriod requires a regular full-circle lattice")
-    val nx = xAxis.size
-    if (periodic) require(
-      math.abs(nx * xAxis.step - xPeriod) <= 1e-6 * xAxis.step,
-      s"xPeriod=$xPeriod requires a full-circle lattice: nx*step = " +
-        s"${nx * xAxis.step}")
-
-    val withId = withStableId(probe)
-    import spark.implicits._
-    val tXY = WindowedTileJoin.DefaultTileXY
-    val hw = halfWindow
-
-    val (cells, probesT) =
-      if (regular) {
-        val cellsR = gridTable.select(
-          round((col(lonCol).cast("double") - lit(xAxis.front)) /
-            lit(xAxis.step)).cast("int").as("_ci"),
-          round((col(latCol).cast("double") - lit(yAxis.front)) /
-            lit(yAxis.step)).cast("int").as("_cj"),
-          col(vCol).cast("double").as("_z"))
-        val fxRaw =
-          (col(xCol).cast("double") - lit(xAxis.front)) / lit(xAxis.step)
-        val fx = if (periodic) pmod(fxRaw, lit(nx.toDouble)) else fxRaw
-        val fy =
-          (col(yCol).cast("double") - lit(yAxis.front)) / lit(yAxis.step)
-        // bracket cell (right-edge-inclusive, findIndexes semantics) ->
-        // window origin; the frame filter mirrors Axis.window with
-        // boundary `undef`: i0 in [halfWindow-1, size-1-halfWindow],
-        // probes outside surface as NaN after the final left join.
-        // Periodic x never rejects and its window origin may be
-        // negative (unwrapped frame).
-        val i0 =
-          if (periodic)
-            when(col("_fx") === lit((nx - 1).toDouble), lit(nx - 2))
-              .otherwise(floor(col("_fx")).cast("int")).cast("int")
-          else least(floor(col("_fx")).cast("int"), lit(nx - 2))
-        val pAll = withId
-          .withColumn("_fx", fx).withColumn("_fy", fy)
-          .withColumn("_i0", i0)
-          .withColumn("_j0",
-            least(floor(col("_fy")).cast("int"), lit(yAxis.size - 2)))
-          .withColumn("_wi", col("_i0") - lit(halfWindow - 1))
-          .withColumn("_wj", col("_j0") - lit(halfWindow - 1))
-        val yFrame = col("_fy") >= 0.0 &&
-          col("_fy") <= lit((yAxis.size - 1).toDouble) &&
-          col("_wj") >= 0 && col("_wj") + (n - 1) <= lit(yAxis.size - 1)
-        val p =
-          if (periodic) pAll.filter(yFrame)
-          else pAll.filter(col("_fx") >= 0.0 &&
-            col("_fx") <= lit((nx - 1).toDouble) &&
-            col("_wi") >= 0 && col("_wi") + (n - 1) <= lit(nx - 1) &&
-            yFrame)
-        // periodic probes evaluate at the UNWRAPPED window coordinate
-        // front + fx·step (fx - wi ∈ [halfWindow-1, halfWindow), always
-        // inside the unwrapped xs frame); non-periodic keeps the raw x
-        // so the established paths stay bit-identical
-        val xEval =
-          if (periodic) lit(xAxis.front) + col("_fx") * lit(xAxis.step)
-          else col(xCol).cast("double")
-        val pT = p.select(col("_rid"), xEval.as("_x"),
-            col(yCol).cast("double").as("_y"), col("_wi"), col("_wj"))
-          .as[(Long, Double, Double, Int, Int)]
-          .map { case (rid, x, y, wi, wj) =>
-            TileProbe(Math.floorDiv(wi, tXY), Math.floorDiv(wj, tXY), 0, 0,
-              rid, x, y, 0.0, 0.0, wi, wj, 0, 0)
-          }
-        (cellsR, pT)
-      } else {
-        // IRREGULAR ascending axes: broadcast the axis value arrays
-        // (O(nx + ny)), key cells via the nearest-index search and
-        // bracket probes via the SAME findIndexes binary search as the
-        // broadcast kernel; the window origin / undef-frame rule is
-        // identical to the affine branch. The tile-halo fan-out and
-        // evaluation are index-based and shared — only the window node
-        // coordinates differ (axis values instead of front + i·step).
-        val bcX = spark.sparkContext.broadcast(xAxis)
-        val bcY = spark.sparkContext.broadcast(yAxis)
-        val nyL = yAxis.size
-        val nxL = nx
-        val cellsI = gridTable.select(col(lonCol).cast("double"),
-            col(latCol).cast("double"), col(vCol).cast("double"))
-          .as[(Double, Double, Double)]
-          .flatMap { case (x, y, z) =>
-            val ci = bcX.value.findIndex(x, bounded = false)
-            val cj = bcY.value.findIndex(y, bounded = false)
-            if (ci >= 0 && cj >= 0) Iterator.single((ci, cj, z))
-            else Iterator.empty
-          }.toDF("_ci", "_cj", "_z")
-        val pT = withId.select(col("_rid"),
-            col(xCol).cast("double").as("_x"),
-            col(yCol).cast("double").as("_y"))
-          .as[(Long, Double, Double)]
-          .flatMap { case (rid, x, y) =>
-            (bcX.value.findIndexes(x), bcY.value.findIndexes(y)) match {
-              case (Some((i0, _)), Some((j0, _))) =>
-                val wi = i0 - (hw - 1)
-                val wj = j0 - (hw - 1)
-                if (wi >= 0 && wi + (2 * hw - 1) <= nxL - 1 &&
-                    wj >= 0 && wj + (2 * hw - 1) <= nyL - 1)
-                  Iterator.single(TileProbe(Math.floorDiv(wi, tXY),
-                    Math.floorDiv(wj, tXY), 0, 0, rid, x, y, 0.0, 0.0,
-                    wi, wj, 0, 0))
-                else Iterator.empty
-              case _ => Iterator.empty
-            }
-          }
-        (cellsI, pT)
-      }
-    val cellsT = WindowedTileJoin.fanOutCells(spark, cells, arity = 2,
-      n = n, halfWindow = halfWindow, tileXY = tXY,
-      tilePlane = WindowedTileJoin.DefaultTilePlane,
-      nx = nx, ny = yAxis.size, nz = 0, nu = 0, periodicX = periodic)
-    val vals = WindowedTileJoin.evaluate(spark, probesT, cellsT,
-      arity = 2, method = method, zMethod = "", uMethod = "", n = n,
-      tileXY = tXY, tilePlane = WindowedTileJoin.DefaultTilePlane,
-      xFront = xAxis.front, xStep = xAxis.step,
-      yFront = yAxis.front, yStep = yAxis.step,
-      xVals = if (regular) null else xAxis.values,
-      yVals = if (regular) null else yAxis.values)
-
-    withId.join(vals, Seq("_rid"), "left")
-      .withColumn(outputCol, coalesce(col("_v"), lit(Double.NaN)))
-      .drop("_rid", "_v")
-  }
+                             xPeriod: Double = 0.0): DataFrame =
+    windowedTable("bivariateTableWindowed", spark, probe,
+      Seq(xCol, yCol), gridTable, method, "", "", halfWindow, "", "",
+      valueCol, outputCol, xPeriod)
 
   /** 3-D grid-as-table WINDOWED interpolation: the reference's flagship
     * trivariate semantics — windowed bicubic/spline in the (x, y) plane
     * on the two z-bracketing planes, then linear (or nearest) combine
     * along z (`pybind/windowed/trivariate.hpp:36-113`) — for lattices too
     * large for the broadcast gate. [[bivariateTableWindowed]]'s
-    * tile-halo plan ([[WindowedTileJoin]]) extended with the z bracket:
-    * probes key by (window tile, z-plane tile), cells ship once per tile
-    * (+ xy halo band + one halo plane — replication ~1.2·(1+1/tilePlane),
-    * NOT the 72× per-probe stencil fan-out), and the per-tile eval runs
-    * the SAME kernels as the broadcast path per plane before the z
-    * combine. Probes outside the frame, and windows with missing/masked
-    * cells, yield NaN (boundary `undef`); the linear z combine is
-    * v0 + t·(v1 − v0) on BOTH bracketing planes even at t = 0 or 1 —
-    * the broadcast kernel's exact op order and NaN propagation. A
-    * GLOBAL lon-periodic lattice is declared by `xPeriod` exactly as on
+    * tile-halo plan extended with the z bracket: probes key by (window
+    * tile, z-plane tile), cells ship once per tile (+ xy halo band + one
+    * halo plane — replication ~1.2·(1+1/tilePlane), NOT the 72×
+    * per-probe stencil fan-out). The linear z combine is v0 + t·(v1 − v0)
+    * on BOTH bracketing planes even at t = 0 or 1 — the broadcast
+    * kernel's exact op order and NaN propagation. Irregular z takes
+    * t = (z − z0)/(z1 − z0) from the axis VALUES. A GLOBAL lon-periodic
+    * lattice is declared by `xPeriod` exactly as on
     * [[bivariateTableWindowed]].
     */
   def trivariateTableWindowed(spark: SparkSession, probe: DataFrame,
@@ -695,361 +628,22 @@ object GridInterpolator {
                               halfWindow: Int = 3,
                               zColName: String = "", valueCol: String = "",
                               outputCol: String = "value",
-                              xPeriod: Double = 0.0): DataFrame = {
-    require(!geometricMethods.contains(method),
-      s"method $method is geometric — use trivariateTable")
-    require(halfWindow >= 1, "halfWindow must be >= 1")
-    val n = 2 * halfWindow
-    val (lonCol, latCol, zName, vCol, xAxis, yAxis, zAxis) =
-      resolveGrid3dTable(gridTable, zColName, valueCol,
-        "trivariateTableWindowed")
-    require(xAxis.size >= n && yAxis.size >= n,
-      "trivariateTableWindowed requires >= 2*halfWindow nodes per plane " +
-        "axis")
-    // periodic longitude: same contract and mechanics as the 2-D path —
-    // full-circle lattice, probe normalization, seam-wrapped stencil
-    // columns through the tile-halo fan-out, unwrapped evaluation frame
-    val periodic = xPeriod != 0.0
-    val regular = xAxis.isRegular && yAxis.isRegular && zAxis.isRegular
-    require(regular || !periodic,
-      "xPeriod requires a regular full-circle lattice")
-    val nx = xAxis.size
-    if (periodic) require(
-      math.abs(nx * xAxis.step - xPeriod) <= 1e-6 * xAxis.step,
-      s"xPeriod=$xPeriod requires a full-circle lattice: nx*step = " +
-        s"${nx * xAxis.step}")
-
-    val withId = withStableId(probe)
-    import spark.implicits._
-    val tXY = WindowedTileJoin.DefaultTileXY
-    val tPl = WindowedTileJoin.DefaultTilePlane
-    val hw = halfWindow
-
-    val (cells, probesT) = if (regular) {
-      val cellsR = gridTable.select(
-        round((col(lonCol).cast("double") - lit(xAxis.front)) /
-          lit(xAxis.step)).cast("int").as("_ci"),
-        round((col(latCol).cast("double") - lit(yAxis.front)) /
-          lit(yAxis.step)).cast("int").as("_cj"),
-        round((col(zName).cast("double") - lit(zAxis.front)) /
-          lit(zAxis.step)).cast("int").as("_ck"),
-        col(vCol).cast("double").as("_z"))
-      def frac(c: String, a: Axis) =
-        (col(c).cast("double") - lit(a.front)) / lit(a.step)
-      val fx =
-        if (periodic) pmod(frac(xCol, xAxis), lit(nx.toDouble))
-        else frac(xCol, xAxis)
-      val i0 =
-        if (periodic)
-          when(col("_fx") === lit((nx - 1).toDouble), lit(nx - 2))
-            .otherwise(floor(col("_fx")).cast("int")).cast("int")
-        else least(floor(col("_fx")).cast("int"), lit(nx - 2))
-      val pAll = withId
-        .withColumn("_fx", fx)
-        .withColumn("_fy", frac(yCol, yAxis))
-        .withColumn("_fz", frac(zCol, zAxis))
-        .withColumn("_i0", i0)
-        .withColumn("_j0",
-          least(floor(col("_fy")).cast("int"), lit(yAxis.size - 2)))
-        .withColumn("_k0",
-          least(floor(col("_fz")).cast("int"), lit(zAxis.size - 2)))
-        .withColumn("_wi", col("_i0") - lit(halfWindow - 1))
-        .withColumn("_wj", col("_j0") - lit(halfWindow - 1))
-        .withColumn("_tz", col("_fz") - col("_k0"))
-      val yzFrame =
-        col("_fy") >= 0.0 && col("_fy") <= lit((yAxis.size - 1).toDouble) &&
-        col("_fz") >= 0.0 && col("_fz") <= lit((zAxis.size - 1).toDouble) &&
-        col("_wj") >= 0 && col("_wj") + (n - 1) <= lit(yAxis.size - 1)
-      val p =
-        if (periodic) pAll.filter(yzFrame)
-        else pAll.filter(col("_fx") >= 0.0 &&
-          col("_fx") <= lit((nx - 1).toDouble) &&
-          col("_wi") >= 0 && col("_wi") + (n - 1) <= lit(nx - 1) && yzFrame)
-      val xEval =
-        if (periodic) lit(xAxis.front) + col("_fx") * lit(xAxis.step)
-        else col(xCol).cast("double")
-      val pT = p.select(col("_rid"), xEval.as("_x"),
-          col(yCol).cast("double").as("_y"), col("_tz"), col("_wi"),
-          col("_wj"), col("_k0"))
-        .as[(Long, Double, Double, Double, Int, Int, Int)]
-        .map { case (rid, x, y, tz, wi, wj, k0) =>
-          TileProbe(Math.floorDiv(wi, tXY), Math.floorDiv(wj, tXY),
-            Math.floorDiv(k0, tPl), 0, rid, x, y, tz, 0.0, wi, wj, k0, 0)
-        }
-      (cellsR, pT)
-    } else {
-      // IRREGULAR ascending axes (pressure levels, non-uniform time):
-      // broadcast the axis value arrays (O(nx + ny + nz) — the cube
-      // root of the lattice), key cells via the nearest-index search and
-      // bracket probes via the SAME findIndexes binary search as the
-      // broadcast kernel; tz = (z − z0)/(z1 − z0) from the axis VALUES,
-      // the broadcast trivariate's exact combine weight. The tile-halo
-      // fan-out and evaluation are index-based and shared — window
-      // x/y node coordinates come from the broadcast value arrays.
-      val bcX = spark.sparkContext.broadcast(xAxis)
-      val bcY = spark.sparkContext.broadcast(yAxis)
-      val bcZ = spark.sparkContext.broadcast(zAxis)
-      val nxL = nx
-      val nyL = yAxis.size
-      val cellsI = gridTable.select(col(lonCol).cast("double"),
-          col(latCol).cast("double"), col(zName).cast("double"),
-          col(vCol).cast("double"))
-        .as[(Double, Double, Double, Double)]
-        .flatMap { case (x, y, z, v) =>
-          val ci = bcX.value.findIndex(x, bounded = false)
-          val cj = bcY.value.findIndex(y, bounded = false)
-          val ck = bcZ.value.findIndex(z, bounded = false)
-          if (ci >= 0 && cj >= 0 && ck >= 0)
-            Iterator.single((ci, cj, ck, v))
-          else Iterator.empty
-        }.toDF("_ci", "_cj", "_ck", "_z")
-      val pT = withId.select(col("_rid"),
-          col(xCol).cast("double").as("_x"),
-          col(yCol).cast("double").as("_y"),
-          col(zCol).cast("double").as("_zq"))
-        .as[(Long, Double, Double, Double)]
-        .flatMap { case (rid, x, y, z) =>
-          (bcX.value.findIndexes(x), bcY.value.findIndexes(y),
-            bcZ.value.findIndexes(z)) match {
-            case (Some((i0, _)), Some((j0, _)), Some((k0, k1))) =>
-              val wi = i0 - (hw - 1)
-              val wj = j0 - (hw - 1)
-              if (wi >= 0 && wi + (2 * hw - 1) <= nxL - 1 &&
-                  wj >= 0 && wj + (2 * hw - 1) <= nyL - 1) {
-                val az = bcZ.value
-                val z0 = az(k0); val z1 = az(k1)
-                val tz = if (z1 == z0) 0.0 else (z - z0) / (z1 - z0)
-                Iterator.single(TileProbe(Math.floorDiv(wi, tXY),
-                  Math.floorDiv(wj, tXY), Math.floorDiv(k0, tPl), 0,
-                  rid, x, y, tz, 0.0, wi, wj, k0, 0))
-              } else Iterator.empty
-            case _ => Iterator.empty
-          }
-        }
-      (cellsI, pT)
-    }
-    val cellsT = WindowedTileJoin.fanOutCells(spark, cells, arity = 3,
-      n = n, halfWindow = halfWindow, tileXY = tXY, tilePlane = tPl,
-      nx = xAxis.size, ny = yAxis.size, nz = zAxis.size, nu = 0,
-      periodicX = periodic)
-    val vals = WindowedTileJoin.evaluate(spark, probesT, cellsT,
-      arity = 3, method = method, zMethod = zMethod, uMethod = "", n = n,
-      tileXY = tXY, tilePlane = tPl,
-      xFront = xAxis.front, xStep = xAxis.step,
-      yFront = yAxis.front, yStep = yAxis.step,
-      xVals = if (regular) null else xAxis.values,
-      yVals = if (regular) null else yAxis.values)
-
-    withId.join(vals, Seq("_rid"), "left")
-      .withColumn(outputCol, coalesce(col("_v"), lit(Double.NaN)))
-      .drop("_rid", "_v")
-  }
-
-  /** Axis-role + value-column resolution for the 4-D grid-as-table paths:
-    * lon/lat from CF/name heuristics, z from `zColName` (or the time
-    * role), u from `uColName` (the 4th axis has no universal naming
-    * convention — callers must name it), value = the remaining column.
-    */
-  private def resolveGrid4dTable(gridTable: DataFrame, zColName: String,
-                                 uColName: String, valueCol: String,
-                                 caller: String)
-      : (String, String, String, String, String, Axis, Axis, Axis, Axis) = {
-    import graft.sources.GridLoader
-    val roles = GridLoader.identifyAxes(gridTable)
-    val lonCol = roles.lon.getOrElse(
-      throw new IllegalArgumentException("no longitude/x axis identified"))
-    val latCol = roles.lat.getOrElse(
-      throw new IllegalArgumentException("no latitude/y axis identified"))
-    val zName =
-      if (zColName.nonEmpty) zColName
-      else roles.time.getOrElse(
-        throw new IllegalArgumentException("no time/z axis identified"))
-    require(uColName.nonEmpty,
-      s"$caller: name the 4th axis column via uColName")
-    val vCol =
-      if (valueCol.nonEmpty) valueCol
-      else gridTable.schema.fields.map(_.name)
-        .filterNot(n => n == lonCol || n == latCol || n == zName ||
-          n == uColName).headOption
-        .getOrElse(throw new IllegalArgumentException("no value column"))
-    val axes = GridLoader.axesOf(gridTable,
-      Seq(lonCol, latCol, zName, uColName))
-    require(axes.forall(a => a.size >= 2 && !a.isPeriodic &&
-      a.front < a.back),
-      s"$caller requires ascending non-periodic axes of >= 2 nodes")
-    (lonCol, latCol, zName, uColName, vCol, axes(0), axes(1), axes(2),
-      axes(3))
-  }
-
-  /** 4-D grid-as-table QUADRILINEAR interpolation: [[trivariateTable]]'s
-    * corner join extended to the 16 bracketing lattice corners (the
-    * geometric quadrivariate semantics,
-    * `pybind/geometric/quadrivariate.hpp`). The lattice never leaves the
-    * cluster.
-    */
-  def quadrivariateTable(spark: SparkSession, probe: DataFrame,
-                         xCol: String, yCol: String, zCol: String,
-                         uCol: String, gridTable: DataFrame,
-                         zColName: String = "", uColName: String = "",
-                         valueCol: String = "",
-                         outputCol: String = "value",
-                         xPeriod: Double = 0.0): DataFrame = {
-    val (lonCol, latCol, zName, uName, vCol, xAxis, yAxis, zAxis, uAxis) =
-      resolveGrid4dTable(gridTable, zColName, uColName, valueCol,
-        "quadrivariateTable")
-    val regular = xAxis.isRegular && yAxis.isRegular && zAxis.isRegular &&
-      uAxis.isRegular
-    // periodic longitude: [[bivariateTable]]'s seam mechanics — pmod
-    // probe normalization, x frame never rejects, right corners wrap
-    val periodic = xPeriod != 0.0
-    require(regular || !periodic,
-      "xPeriod requires a regular full-circle lattice")
-    val nx = xAxis.size
-    if (periodic) require(
-      math.abs(nx * xAxis.step - xPeriod) <= 1e-6 * xAxis.step,
-      s"xPeriod=$xPeriod requires a full-circle lattice: nx*step = " +
-        s"${nx * xAxis.step}")
-    val withId = withStableId(probe)
-    val (cells, corners) = if (regular) {
-      val cellsR = gridTable.select(
-        round((col(lonCol).cast("double") - lit(xAxis.front)) /
-          lit(xAxis.step)).cast("int").as("_ci"),
-        round((col(latCol).cast("double") - lit(yAxis.front)) /
-          lit(yAxis.step)).cast("int").as("_cj"),
-        round((col(zName).cast("double") - lit(zAxis.front)) /
-          lit(zAxis.step)).cast("int").as("_ck"),
-        round((col(uName).cast("double") - lit(uAxis.front)) /
-          lit(uAxis.step)).cast("int").as("_cl"),
-        col(vCol).cast("double").as("_z"))
-      def frac(c: String, a: Axis) =
-        (col(c).cast("double") - lit(a.front)) / lit(a.step)
-      val fx =
-        if (periodic) pmod(frac(xCol, xAxis), lit(nx.toDouble))
-        else frac(xCol, xAxis)
-      val i0 =
-        if (periodic)
-          when(col("_fx") === lit((nx - 1).toDouble), lit(nx - 2))
-            .otherwise(floor(col("_fx")).cast("int")).cast("int")
-        else least(floor(col("_fx")).cast("int"), lit(nx - 2))
-      val pAll = withId
-        .withColumn("_fx", fx)
-        .withColumn("_fy", frac(yCol, yAxis))
-        .withColumn("_fz", frac(zCol, zAxis))
-        .withColumn("_fu", frac(uCol, uAxis))
-        .withColumn("_i0", i0)
-        .withColumn("_j0",
-          least(floor(col("_fy")).cast("int"), lit(yAxis.size - 2)))
-        .withColumn("_k0",
-          least(floor(col("_fz")).cast("int"), lit(zAxis.size - 2)))
-        .withColumn("_l0",
-          least(floor(col("_fu")).cast("int"), lit(uAxis.size - 2)))
-        .withColumn("_tx", col("_fx") - col("_i0"))
-        .withColumn("_ty", col("_fy") - col("_j0"))
-        .withColumn("_tz", col("_fz") - col("_k0"))
-        .withColumn("_tu", col("_fu") - col("_l0"))
-      val yzuFrame =
-        col("_fy") >= 0.0 && col("_fy") <= lit((yAxis.size - 1).toDouble) &&
-        col("_fz") >= 0.0 && col("_fz") <= lit((zAxis.size - 1).toDouble) &&
-        col("_fu") >= 0.0 && col("_fu") <= lit((uAxis.size - 1).toDouble)
-      val p =
-        if (periodic) pAll.filter(yzuFrame)
-        else pAll.filter(col("_fx") >= 0.0 &&
-          col("_fx") <= lit((nx - 1).toDouble) && yzuFrame)
-      def ciOf(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        if (periodic) pmod(c, lit(nx)) else c
-      val cornerStructs =
-        for (di <- 0 to 1; dj <- 0 to 1; dk <- 0 to 1; dl <- 0 to 1)
-        yield {
-          def w(t: org.apache.spark.sql.Column, d: Int) =
-            if (d == 1) t else lit(1.0) - t
-          struct(ciOf(col("_i0") + di).as("_ci"),
-            (col("_j0") + dj).as("_cj"),
-            (col("_k0") + dk).as("_ck"), (col("_l0") + dl).as("_cl"),
-            (w(col("_tx"), di) * w(col("_ty"), dj) * w(col("_tz"), dk) *
-              w(col("_tu"), dl)).as("_w"))
-        }
-      val cornersR = p.select(col("_rid"),
-          explode(array(cornerStructs: _*)).as("_c"))
-        .select(col("_rid"), col("_c._ci").as("_ci"),
-          col("_c._cj").as("_cj"), col("_c._ck").as("_ck"),
-          col("_c._cl").as("_cl"), col("_c._w").as("_w"))
-      (cellsR, cornersR)
-    } else {
-      // IRREGULAR ascending axes: broadcast axis arrays + the broadcast
-      // kernel's findIndexes brackets, extended to the 16 corners — the
-      // 4-D analog of the 2-D/3-D irregular corner fan-outs; the join
-      // plan is unchanged
-      import spark.implicits._
-      val bcX = spark.sparkContext.broadcast(xAxis)
-      val bcY = spark.sparkContext.broadcast(yAxis)
-      val bcZ = spark.sparkContext.broadcast(zAxis)
-      val bcU = spark.sparkContext.broadcast(uAxis)
-      val cellsI = gridTable.select(col(lonCol).cast("double"),
-          col(latCol).cast("double"), col(zName).cast("double"),
-          col(uName).cast("double"), col(vCol).cast("double"))
-        .as[(Double, Double, Double, Double, Double)]
-        .flatMap { case (x, y, z, u, v) =>
-          val ci = bcX.value.findIndex(x, bounded = false)
-          val cj = bcY.value.findIndex(y, bounded = false)
-          val ck = bcZ.value.findIndex(z, bounded = false)
-          val cl = bcU.value.findIndex(u, bounded = false)
-          if (ci >= 0 && cj >= 0 && ck >= 0 && cl >= 0)
-            Iterator.single((ci, cj, ck, cl, v))
-          else Iterator.empty
-        }.toDF("_ci", "_cj", "_ck", "_cl", "_z")
-      val cornersI = withId.select(col("_rid"),
-          col(xCol).cast("double").as("_x"),
-          col(yCol).cast("double").as("_y"),
-          col(zCol).cast("double").as("_zq"),
-          col(uCol).cast("double").as("_uq"))
-        .as[(Long, Double, Double, Double, Double)]
-        .flatMap { case (rid, x, y, z, u) =>
-          (bcX.value.findIndexes(x), bcY.value.findIndexes(y),
-            bcZ.value.findIndexes(z), bcU.value.findIndexes(u)) match {
-            case (Some((i0, i1)), Some((j0, j1)), Some((k0, k1)),
-                Some((l0, l1))) =>
-              val ax = bcX.value; val ay = bcY.value
-              val az = bcZ.value; val au = bcU.value
-              def tOf(v: Double, lo: Double, hi: Double) =
-                if (hi == lo) 0.0 else (v - lo) / (hi - lo)
-              val tx = tOf(x, ax(i0), ax(i1))
-              val ty = tOf(y, ay(j0), ay(j1))
-              val tz = tOf(z, az(k0), az(k1))
-              val tu = tOf(u, au(l0), au(l1))
-              for {
-                (ci, wx) <- Iterator((i0, 1 - tx), (i1, tx))
-                (cj, wy) <- Iterator((j0, 1 - ty), (j1, ty))
-                (ck, wz) <- Iterator((k0, 1 - tz), (k1, tz))
-                (cl, wu) <- Iterator((l0, 1 - tu), (l1, tu))
-              } yield (rid, ci, cj, ck, cl, wx * wy * wz * wu)
-            case _ => Iterator.empty
-          }
-        }.toDF("_rid", "_ci", "_cj", "_ck", "_cl", "_w")
-      (cellsI, cornersI)
-    }
-    val agg = corners.join(cells, Seq("_ci", "_cj", "_ck", "_cl"))
-      .groupBy("_rid")
-      .agg(sum(col("_w") * col("_z")).as("_v"), count(lit(1)).as("_n"))
-      .select(col("_rid"),
-        when(col("_n") === 16, col("_v")).otherwise(lit(Double.NaN))
-          .as("_v"))
-    withId.join(agg, Seq("_rid"), "left")
-      .withColumn(outputCol, coalesce(col("_v"), lit(Double.NaN)))
-      .drop("_rid", "_v")
-  }
+                              xPeriod: Double = 0.0): DataFrame =
+    windowedTable("trivariateTableWindowed", spark, probe,
+      Seq(xCol, yCol, zCol), gridTable, method, zMethod, "", halfWindow,
+      zColName, "", valueCol, outputCol, xPeriod)
 
   /** 4-D grid-as-table WINDOWED interpolation: windowed bicubic/spline in
     * the (x, y) plane on the FOUR (z, u)-bracketing planes, then bilinear
     * (or nearest per axis) combine across (z, u) — the
     * `pybind/windowed/quadrivariate.hpp` semantics for lattices above the
-    * broadcast gate. Runs on the [[WindowedTileJoin]] tile-halo plan
-    * (probes and cells co-grouped by (xy tile, z tile, u tile); cell
+    * broadcast gate, on the [[WindowedTileJoin]] tile-halo plan (cell
     * replication ~1.2·(1+1/tilePlane)², NOT the 144× per-probe stencil
     * fan-out). The linear combine is the broadcast kernel's nested lerp
-    * (u outer, z inner, v0 + t·(v1 − v0) at each level) — bit-identical
-    * op order and NaN propagation; nearest snaps per axis and only
-    * assembles the snapped plane. A GLOBAL lon-periodic lattice is
-    * declared by `xPeriod` exactly as on [[bivariateTableWindowed]].
+    * (u outer, z inner) — bit-identical op order and NaN propagation;
+    * nearest snaps per axis and only assembles the snapped plane. A
+    * GLOBAL lon-periodic lattice is declared by `xPeriod` exactly as on
+    * [[bivariateTableWindowed]].
     */
   def quadrivariateTableWindowed(spark: SparkSession, probe: DataFrame,
                                  xCol: String, yCol: String, zCol: String,
@@ -1061,163 +655,10 @@ object GridInterpolator {
                                  zColName: String = "", uColName: String = "",
                                  valueCol: String = "",
                                  outputCol: String = "value",
-                                 xPeriod: Double = 0.0): DataFrame = {
-    require(!geometricMethods.contains(method),
-      s"method $method is geometric — use quadrivariateTable")
-    require(halfWindow >= 1, "halfWindow must be >= 1")
-    val n = 2 * halfWindow
-    val (lonCol, latCol, zName, uName, vCol, xAxis, yAxis, zAxis, uAxis) =
-      resolveGrid4dTable(gridTable, zColName, uColName, valueCol,
-        "quadrivariateTableWindowed")
-    require(xAxis.size >= n && yAxis.size >= n,
-      "quadrivariateTableWindowed requires >= 2*halfWindow nodes per " +
-        "plane axis")
-    val periodic = xPeriod != 0.0
-    val regular = xAxis.isRegular && yAxis.isRegular && zAxis.isRegular &&
-      uAxis.isRegular
-    require(regular || !periodic,
-      "xPeriod requires a regular full-circle lattice")
-    val nx4 = xAxis.size
-    if (periodic) require(
-      math.abs(nx4 * xAxis.step - xPeriod) <= 1e-6 * xAxis.step,
-      s"xPeriod=$xPeriod requires a full-circle lattice: nx*step = " +
-        s"${nx4 * xAxis.step}")
-    val withId = withStableId(probe)
-    import spark.implicits._
-    val tXY = WindowedTileJoin.DefaultTileXY
-    val tPl = WindowedTileJoin.DefaultTilePlane
-    val hw = halfWindow
-
-    val (cells, probesT) = if (regular) {
-      val cellsR = gridTable.select(
-        round((col(lonCol).cast("double") - lit(xAxis.front)) /
-          lit(xAxis.step)).cast("int").as("_ci"),
-        round((col(latCol).cast("double") - lit(yAxis.front)) /
-          lit(yAxis.step)).cast("int").as("_cj"),
-        round((col(zName).cast("double") - lit(zAxis.front)) /
-          lit(zAxis.step)).cast("int").as("_ck"),
-        round((col(uName).cast("double") - lit(uAxis.front)) /
-          lit(uAxis.step)).cast("int").as("_cl"),
-        col(vCol).cast("double").as("_z"))
-      def frac(c: String, a: Axis) =
-        (col(c).cast("double") - lit(a.front)) / lit(a.step)
-      val fx4 =
-        if (periodic) pmod(frac(xCol, xAxis), lit(nx4.toDouble))
-        else frac(xCol, xAxis)
-      val i04 =
-        if (periodic)
-          when(col("_fx") === lit((nx4 - 1).toDouble), lit(nx4 - 2))
-            .otherwise(floor(col("_fx")).cast("int")).cast("int")
-        else least(floor(col("_fx")).cast("int"), lit(nx4 - 2))
-      val pAll = withId
-        .withColumn("_fx", fx4)
-        .withColumn("_fy", frac(yCol, yAxis))
-        .withColumn("_fz", frac(zCol, zAxis))
-        .withColumn("_fu", frac(uCol, uAxis))
-        .withColumn("_i0", i04)
-        .withColumn("_j0",
-          least(floor(col("_fy")).cast("int"), lit(yAxis.size - 2)))
-        .withColumn("_k0",
-          least(floor(col("_fz")).cast("int"), lit(zAxis.size - 2)))
-        .withColumn("_l0",
-          least(floor(col("_fu")).cast("int"), lit(uAxis.size - 2)))
-        .withColumn("_wi", col("_i0") - lit(halfWindow - 1))
-        .withColumn("_wj", col("_j0") - lit(halfWindow - 1))
-        .withColumn("_tz", col("_fz") - col("_k0"))
-        .withColumn("_tu", col("_fu") - col("_l0"))
-      val yzuFrame =
-        col("_fy") >= 0.0 && col("_fy") <= lit((yAxis.size - 1).toDouble) &&
-        col("_fz") >= 0.0 && col("_fz") <= lit((zAxis.size - 1).toDouble) &&
-        col("_fu") >= 0.0 && col("_fu") <= lit((uAxis.size - 1).toDouble) &&
-        col("_wj") >= 0 && col("_wj") + (n - 1) <= lit(yAxis.size - 1)
-      val p =
-        if (periodic) pAll.filter(yzuFrame)
-        else pAll.filter(col("_fx") >= 0.0 &&
-          col("_fx") <= lit((nx4 - 1).toDouble) &&
-          col("_wi") >= 0 && col("_wi") + (n - 1) <= lit(nx4 - 1) &&
-          yzuFrame)
-      val xEval4 =
-        if (periodic) lit(xAxis.front) + col("_fx") * lit(xAxis.step)
-        else col(xCol).cast("double")
-      val pT = p.select(col("_rid"), xEval4.as("_x"),
-          col(yCol).cast("double").as("_y"), col("_tz"), col("_tu"),
-          col("_wi"), col("_wj"), col("_k0"), col("_l0"))
-        .as[(Long, Double, Double, Double, Double, Int, Int, Int, Int)]
-        .map { case (rid, x, y, tz, tu, wi, wj, k0, l0) =>
-          TileProbe(Math.floorDiv(wi, tXY), Math.floorDiv(wj, tXY),
-            Math.floorDiv(k0, tPl), Math.floorDiv(l0, tPl),
-            rid, x, y, tz, tu, wi, wj, k0, l0)
-        }
-      (cellsR, pT)
-    } else {
-      // IRREGULAR ascending axes: the 3-D irregular branch extended
-      // with the u bracket — broadcast axis value arrays, findIndexes
-      // brackets, tz/tu = (v − v0)/(v1 − v0) from the axis VALUES (the
-      // broadcast quadrivariate's exact combine weights)
-      val bcX = spark.sparkContext.broadcast(xAxis)
-      val bcY = spark.sparkContext.broadcast(yAxis)
-      val bcZ = spark.sparkContext.broadcast(zAxis)
-      val bcU = spark.sparkContext.broadcast(uAxis)
-      val nxL = nx4
-      val nyL = yAxis.size
-      val cellsI = gridTable.select(col(lonCol).cast("double"),
-          col(latCol).cast("double"), col(zName).cast("double"),
-          col(uName).cast("double"), col(vCol).cast("double"))
-        .as[(Double, Double, Double, Double, Double)]
-        .flatMap { case (x, y, z, u, v) =>
-          val ci = bcX.value.findIndex(x, bounded = false)
-          val cj = bcY.value.findIndex(y, bounded = false)
-          val ck = bcZ.value.findIndex(z, bounded = false)
-          val cl = bcU.value.findIndex(u, bounded = false)
-          if (ci >= 0 && cj >= 0 && ck >= 0 && cl >= 0)
-            Iterator.single((ci, cj, ck, cl, v))
-          else Iterator.empty
-        }.toDF("_ci", "_cj", "_ck", "_cl", "_z")
-      val pT = withId.select(col("_rid"),
-          col(xCol).cast("double").as("_x"),
-          col(yCol).cast("double").as("_y"),
-          col(zCol).cast("double").as("_zq"),
-          col(uCol).cast("double").as("_uq"))
-        .as[(Long, Double, Double, Double, Double)]
-        .flatMap { case (rid, x, y, z, u) =>
-          (bcX.value.findIndexes(x), bcY.value.findIndexes(y),
-            bcZ.value.findIndexes(z), bcU.value.findIndexes(u)) match {
-            case (Some((i0, _)), Some((j0, _)), Some((k0, k1)),
-                Some((l0, l1))) =>
-              val wi = i0 - (hw - 1)
-              val wj = j0 - (hw - 1)
-              if (wi >= 0 && wi + (2 * hw - 1) <= nxL - 1 &&
-                  wj >= 0 && wj + (2 * hw - 1) <= nyL - 1) {
-                val az = bcZ.value; val au = bcU.value
-                val z0 = az(k0); val z1 = az(k1)
-                val u0 = au(l0); val u1 = au(l1)
-                val tz = if (z1 == z0) 0.0 else (z - z0) / (z1 - z0)
-                val tu = if (u1 == u0) 0.0 else (u - u0) / (u1 - u0)
-                Iterator.single(TileProbe(Math.floorDiv(wi, tXY),
-                  Math.floorDiv(wj, tXY), Math.floorDiv(k0, tPl),
-                  Math.floorDiv(l0, tPl), rid, x, y, tz, tu, wi, wj,
-                  k0, l0))
-              } else Iterator.empty
-            case _ => Iterator.empty
-          }
-        }
-      (cellsI, pT)
-    }
-    val cellsT = WindowedTileJoin.fanOutCells(spark, cells, arity = 4,
-      n = n, halfWindow = halfWindow, tileXY = tXY, tilePlane = tPl,
-      nx = xAxis.size, ny = yAxis.size, nz = zAxis.size, nu = uAxis.size,
-      periodicX = periodic)
-    val vals = WindowedTileJoin.evaluate(spark, probesT, cellsT,
-      arity = 4, method = method, zMethod = zMethod, uMethod = uMethod,
-      n = n, tileXY = tXY, tilePlane = tPl,
-      xFront = xAxis.front, xStep = xAxis.step,
-      yFront = yAxis.front, yStep = yAxis.step,
-      xVals = if (regular) null else xAxis.values,
-      yVals = if (regular) null else yAxis.values)
-    withId.join(vals, Seq("_rid"), "left")
-      .withColumn(outputCol, coalesce(col("_v"), lit(Double.NaN)))
-      .drop("_rid", "_v")
-  }
+                                 xPeriod: Double = 0.0): DataFrame =
+    windowedTable("quadrivariateTableWindowed", spark, probe,
+      Seq(xCol, yCol, zCol, uCol), gridTable, method, zMethod, uMethod,
+      halfWindow, zColName, uColName, valueCol, outputCol, xPeriod)
 
   /** Univariate interpolation / derivative over a broadcast 1-D grid —
     * the `pyinterp.univariate` / `univariate_derivative` entry points

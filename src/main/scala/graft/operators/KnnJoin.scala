@@ -161,7 +161,8 @@ object KnnJoin {
     * When fewer than cap+1 rows come back they ARE the complete build side
     * (the limit was not the binding constraint), so no second scan runs.
     */
-  private def collectCapped[T](ds: Dataset[T], cap: Long): Option[Array[T]] = {
+  private[operators] def collectCapped[T](ds: Dataset[T], cap: Long)
+      : Option[Array[T]] = {
     val lim = math.min(cap, Int.MaxValue.toLong - 2L).toInt
     // cheap overflow probe first (r3 ADVICE): counting limit(cap+1) keeps
     // the up-to-cap+1 overflow rows on an executor, not as a transient

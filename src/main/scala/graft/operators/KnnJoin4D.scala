@@ -34,13 +34,6 @@ object KnnJoin4D {
       saltFactor: Int = 1,
       maxBroadcastRows: Long = 4000000L)
 
-  private def collectCapped[T](ds: org.apache.spark.sql.Dataset[T],
-      cap: Long): Option[Array[T]] = {
-    val lim = math.min(cap, Int.MaxValue.toLong - 2L).toInt
-    val a = ds.limit(lim + 1).collect()
-    if (a.length > lim) None else Some(a)
-  }
-
   case class B4(key: Long, c: Array[Double], value: Double,
                         sigma2: Double, id: Long)
   case class P4(key: Long, qid: Long, c: Array[Double])
@@ -80,7 +73,7 @@ object KnnJoin4D {
     // the broadcast path and inside B4 on the shuffle path
     val collected =
       if (useBroadcast(build, cfg))
-        collectCapped(buildTyped, cfg.maxBroadcastRows)
+        KnnJoin.collectCapped(buildTyped, cfg.maxBroadcastRows)
       else None
     if (collected.isDefined) {
       val pts = collected.get
@@ -158,7 +151,7 @@ object KnnJoin4D {
       .as[(Long, Double, Double, Double, Double)]
     val collected =
       if (useBroadcast(build, cfg))
-        collectCapped(buildTyped, cfg.maxBroadcastRows)
+        KnnJoin.collectCapped(buildTyped, cfg.maxBroadcastRows)
       else None
     if (collected.isDefined) {
       val pts = collected.get

@@ -184,10 +184,10 @@ private[operators] object WindowedTileJoin {
     val tp = tilePlane
     val ar = arity
     val xf = xFront; val xs0 = xStep; val yf = yFront; val ys0 = yStep
-    // irregular axes: window node coordinates come from the broadcast
+    // non-periodic axes: window node coordinates come from the broadcast
     // axis value arrays (O(nx + ny)) instead of the affine front + i·step
-    // — indexes are always in-range here (irregular excludes periodic
-    // unwrapping)
+    // — indexes are always in-range here (only a periodic x unwraps past
+    // the axis ends, and it keeps the affine nodes)
     val bxv = if (xVals == null) null
       else spark.sparkContext.broadcast(xVals)
     val byv = if (yVals == null) null
