@@ -6,10 +6,11 @@ package graft.core
   * (`/root/reference/cxx/include/pyinterp/geometry/rtree.hpp:57-83`):
   * bulk-packed build (median splits ≙ STR packing), exact k-nearest
   * traversal with a bounded max-heap, optional radius post-filter
-  * (`rtree.hpp:306-336`). Dimensionality 2 or 3 (ECEF geodetic points are
-  * 3-D). Each partition of the Spark kNN join builds one of these over its
-  * cell range; the structure is append-only after construction and safe to
-  * share read-only across tasks of a partition.
+  * (`rtree.hpp:306-336`). Dimensionality 2, 3 or 4 (ECEF geodetic points
+  * are 3-D, RTree4D observations 4-D). Each partition of the Spark kNN
+  * join builds one of these over its cell range; the structure is
+  * append-only after construction and safe to share read-only across
+  * tasks of a partition.
   *
   * @param coords flattened point coordinates, length n*dims
   * @param payload caller value per point (e.g. the observed scalar)
@@ -63,25 +64,21 @@ final class KdTree(private val dims: Int, private val coords: Array[Double],
   def query(q: Array[Double], k: Int,
             radius: Double = Double.PositiveInfinity)
       : Array[(Double, Double, Long)] =
-    knnRaw(q, k, radius).map { case (d, i) => (d, payload(i), ids(i)) }
+    nearest(q, k, radius).map { case (d, i) => (d, payload(i), ids(i)) }
 
-  /** Like [[query]] but also returns each neighbor's coordinates — the
-    * input RBF/kriging/optimal-interpolation need (they re-evaluate kernels
-    * against the neighbor positions, `rtree.hpp:450-471`).
+  /** Value, id and coordinates of the point built at index `i` (the
+    * position in the `build` iterator; what [[nearest]] returns).
     */
-  def queryWithCoords(q: Array[Double], k: Int,
-                      radius: Double = Double.PositiveInfinity)
-      : Array[(Double, Double, Long, Array[Double])] =
-    knnRaw(q, k, radius).map { case (d, i) =>
-      val c = new Array[Double](dims)
-      System.arraycopy(coords, i * dims, c, 0, dims)
-      (d, payload(i), ids(i), c)
-    }
+  def value(i: Int): Double = payload(i)
+  def id(i: Int): Long = ids(i)
+  def point(i: Int): Array[Double] =
+    java.util.Arrays.copyOfRange(coords, i * dims, (i + 1) * dims)
 
-  /** Shared exact-kNN core: (distance, internal index) sorted ascending by
-    * (distance, id).
+  /** Exact-kNN core: (distance, build index) sorted ascending by
+    * (distance, id), so callers can read per-point data the tree does
+    * not hold from their own build-ordered arrays.
     */
-  private def knnRaw(q: Array[Double], k: Int, radius: Double)
+  def nearest(q: Array[Double], k: Int, radius: Double)
       : Array[(Double, Int)] = {
     // bounded max-heap over (squared distance, id) lexicographic
     val heapD = new Array[Double](k)

@@ -22,10 +22,15 @@ object VecKernels {
   /** Cosine similarity; same op order as
     * `dot(a,b) / (norm(a) * norm(b))` with each factor a separate left
     * fold (dot = Σ a_i·b_i, norm² = Σ x_i²). Elements must be non-null.
+    * Length-mismatched arrays throw: the Column form's `zip_with` pads
+    * the shorter side with null and yields a null cosine, never a number.
     */
   def cosine(a: ArrayData, b: ArrayData, aFloat: Boolean,
              bFloat: Boolean): Double = {
-    val n = math.min(a.numElements(), b.numElements())
+    val n = a.numElements()
+    if (b.numElements() != n)
+      throw new IllegalArgumentException(
+        s"cosine of length-mismatched embeddings ($n vs ${b.numElements()})")
     var d = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
@@ -36,11 +41,6 @@ object VecKernels {
       nb += y * y
       i += 1
     }
-    // zip_with pads the shorter side with null -> the HOF dot would be
-    // null; arrays here always have equal length (same embedding table)
-    var j = n
-    while (j < a.numElements()) { val x = elem(a, j, aFloat); na += x * x; j += 1 }
-    while (j < b.numElements()) { val y = elem(b, j, bFloat); nb += y * y; j += 1 }
     val denom = math.sqrt(na) * math.sqrt(nb)
     if (denom == 0.0)
       // a zero-norm vector: the Column form's Divide throws under ANSI
@@ -55,11 +55,16 @@ object VecKernels {
   /** Sign-random-projection bucket id: for plane p, proj = left fold of
     * acc + x_i · m[p*dims + i]; bit p set iff proj >= 0 (NaN -> unset,
     * matching `when(proj >= 0, ...)`). Returns Σ_p bit_p — identical to
-    * the `bits.reduce(_ + _)` sum (bits are disjoint powers of two).
+    * the `bits.reduce(_ + _)` sum (bits are disjoint powers of two). An
+    * embedding that is not `dims` long throws (the Column form's null
+    * projection would silently land it in bucket 0).
     */
   def lshBucket(x: ArrayData, m: Array[Double], planes: Int, dims: Int,
                 isFloat: Boolean): Long = {
-    val n = math.min(x.numElements(), dims)
+    val n = x.numElements()
+    if (n != dims)
+      throw new IllegalArgumentException(
+        s"lshBucket of a $n-element embedding; the planes have $dims dims")
     var bucket = 0L
     var p = 0
     while (p < planes) {
@@ -73,21 +78,22 @@ object VecKernels {
     bucket
   }
 
-  /** MinHash signature from the per-shingle xxhash64 array: slot i is
-    * min over h of rot_{r_i}(h) ^ b_i (rotate-xor bijection family,
-    * r_i/b_i derived from splitmix64 exactly as the Column form).
-    * An empty hash array yields all-null slots — `array_min(transform(
-    * [], ...))` is null — preserving the HOF form's behavior for
-    * shingle-less documents.
-    */
   /** All-null k-slot signature (the null-input value of the HOF form). */
   def minhashNulls(k: Int): ArrayData = new GenericArrayData(new Array[Any](k))
 
+  /** MinHash signature from the per-shingle xxhash64 array: slot i is
+    * min over h of rot_{r_i}(h) ^ b_i (rotate-xor bijection family,
+    * r_i/b_i derived from splitmix64 exactly as the Column form). Null
+    * elements are skipped like `array_min` skips them; an array with no
+    * non-null element yields all-null slots — `array_min(transform([],
+    * ...))` is null — preserving the HOF form's behavior for shingle-less
+    * documents.
+    */
   def minhashSig(hashes: ArrayData, rots: Array[Int],
                  xors: Array[Long]): ArrayData = {
     val k = rots.length
     val n = hashes.numElements()
-    if (n == 0) return new GenericArrayData(new Array[Any](k))
+    if ((0 until n).forall(hashes.isNullAt)) return minhashNulls(k)
     val out = new Array[Long](k)
     var i = 0
     while (i < k) {
@@ -96,9 +102,11 @@ object VecKernels {
       var best = Long.MaxValue
       var j = 0
       while (j < n) {
-        val h = hashes.getLong(j)
-        val v = ((h << r) | (h >>> (64 - r))) ^ b
-        if (v < best) best = v
+        if (!hashes.isNullAt(j)) {
+          val h = hashes.getLong(j)
+          val v = ((h << r) | (h >>> (64 - r))) ^ b
+          if (v < best) best = v
+        }
         j += 1
       }
       out(i) = best

@@ -166,20 +166,26 @@ object Dedup {
     * every candidate), then one fused intersect pass scores survivors.
     * Results identical: pruned pairs fail the jaccard filter by
     * construction, and the fused coefficient is bit-equal to the
-    * intersect/union size ratio on distinct shingle arrays.
+    * intersect/union size ratio on distinct shingle arrays. Error
+    * behaviour differs on purpose: a pair of two EMPTY shingle arrays
+    * (undefined Jaccard) is pruned at every threshold, where the
+    * intersect/union form raised DIVIDE_BY_ZERO under ANSI mode. Neither
+    * the bound nor the kernel is evaluated on such a pair: Catalyst may
+    * evaluate both on a shingle-less document's self-pair before the
+    * id_a < id_b filter, which failed the whole all-pairs scoring.
     */
   private def scoredPairs(pairs: DataFrame, threshold: Double): DataFrame = {
     import org.apache.spark.sql.graft.ColumnBridge
     val jac = ColumnBridge.column(graft.functions.JaccardCoeff(
       ColumnBridge.expression(col("sh_a")),
       ColumnBridge.expression(col("sh_b"))))
-    val sizeBound = least(size(col("sh_a")), size(col("sh_b")))
-      .cast("double") /
-      (size(col("sh_a")) + size(col("sh_b")) -
-        least(size(col("sh_a")), size(col("sh_b")))).cast("double")
-    val pre =
-      if (threshold > 0.0) pairs.filter(sizeBound >= threshold) else pairs
-    pre.select(col("id_a"), col("id_b"), jac.as("jaccard"))
+    val smaller = least(size(col("sh_a")), size(col("sh_b")))
+    val union = size(col("sh_a")) + size(col("sh_b")) - smaller
+    val defined = union > 0
+    val sizeBound =
+      when(defined, smaller.cast("double") / union.cast("double"))
+    pairs.filter(sizeBound >= threshold)
+      .select(col("id_a"), col("id_b"), when(defined, jac).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{GeoHash, Geodesy, KdTree}
 
@@ -8,21 +8,27 @@ import graft.core.{GeoHash, Geodesy, KdTree}
   *
   * Re-expresses the reference R-tree queries
   * (`/root/reference/cxx/include/pyinterp/geometry/rtree.hpp:306-429`,
-  * IDW `:398-429`, window function `:500-535`) as a cell-partitioned
-  * Spark join:
+  * IDW `:398-429`, window function `:500-535`, RTree4D
+  * `pybind/rtree4d.hpp:31-117`) as a cell-partitioned Spark join. One
+  * search core ([[search]]) serves every face:
   *
-  *   - both sides are H3-style cell-encoded ([[graft.core.GeoHash]],
-  *     precision `cfg.precision`);
-  *   - the build side is **replicated to its 8 neighbor cells** (one
-  *     `explode`), so each probe point sees every build point of its 3x3
-  *     cell block — the distributed analog of the reference's global-tree
-  *     border correctness (`geohash/int64.hpp:103-113` neighbors);
+  *   - both sides are keyed by a cell space: GeoHash cells
+  *     ([[graft.core.GeoHash]], precision `cfg.precision`) for 2-D and
+  *     geodetic points, a `cellSize` grid on (x1, x2) for 4-D points
+  *     ([[KnnJoin4D]]; x3/x4 ride unbucketed inside the cell trees — they
+  *     are time/level axes with small extent in the reference's use);
+  *   - the build side is **replicated to its 8 neighbor cells**, so each
+  *     probe point sees every build point of its 3x3 cell block — the
+  *     distributed analog of the reference's global-tree border
+  *     correctness (`geohash/int64.hpp:103-113` neighbors);
   *   - one shuffle co-groups by cell; each group builds an in-memory
   *     k-d tree (≙ boost R*-tree) and answers its probes with a bounded
   *     heap — per-partition state exactly like the reference's per-thread
   *     interpolators (`parallel_for.hpp:30-76`);
   *   - geodetic inputs are ranked by ECEF chord distance
-  *     (`pybind/rtree.hpp:253-275`), cartesian by euclidean distance.
+  *     (`pybind/rtree.hpp:253-275`), cartesian by euclidean distance;
+  *   - each face (k-nearest, k-nearest with coordinates, ball) is a
+  *     per-probe answer function over the searched block.
   *
   * kNN across-block correctness holds when the k-th neighbor distance is
   * at most one cell size; `exact` flags rows where this is violated so
@@ -33,26 +39,27 @@ import graft.core.{GeoHash, Geodesy, KdTree}
 object KnnJoin {
 
   /** k/radius defaults follow `config/rtree.hpp:88-94`.
-    * `saltFactor > 1` splits each cell's PROBE rows across that many
-    * salt buckets and replicates the build rows to all of them —
-    * explicit hot-cell (dense imagery region) skew handling for the
-    * shuffle path, where AQE's skew-join rewrite does not apply to
-    * object cogroups.
-    */
-  /** `boundaryCheck` (`geometry/rtree.hpp:37-46,582-616`): "none",
-    * "envelope" (query inside the neighbors' AABB) or "convex_hull"
-    * (2-D cartesian only, like the reference rejects 4-D); an invalid
+    *
+    * `saltFactor > 1` splits each cell's PROBE rows across that many salt
+    * buckets and replicates the build rows to all of them — explicit
+    * hot-cell (dense imagery region) skew handling for the shuffle path,
+    * where AQE's skew-join rewrite does not apply to object cogroups.
+    *
+    * `boundaryCheck` (`geometry/rtree.hpp:37-46,582-616`): "none",
+    * "envelope" (query inside the neighbors' AABB) or "convex_hull" (2-D
+    * cartesian only, like the reference rejects 4-D); an invalid
     * neighborhood empties the result (interpolators yield NaN + 0
     * neighbors).
-    */
-  /** `broadcastThreshold` is a ROW-count threshold applied to Catalyst's
-    * optimizer BYTE estimate at ~32 bytes/row (no counting scan; 0 forces
-    * shuffle, Long.MaxValue forces broadcast). Because a post-filter
-    * estimate is a selectivity heuristic that can undershoot,
-    * `maxBroadcastRows` is the HARD safety cap actually enforced at
-    * collect time: the broadcast path collects at most that many rows and
-    * falls over to the shuffle path if the limit is hit — the driver can
-    * never be asked to hold an arbitrarily large build side.
+    *
+    * `broadcastThreshold` is a ROW-count threshold applied to Catalyst's
+    * optimizer BYTE estimate at 8 bytes per selected column (32 B for
+    * (x, y, value, id); no counting scan; 0 forces shuffle, Long.MaxValue
+    * forces broadcast). Because a post-filter estimate is a selectivity
+    * heuristic that can undershoot, `maxBroadcastRows` is the HARD safety
+    * cap actually enforced at collect time: the broadcast path collects at
+    * most that many rows and falls over to the shuffle path if the limit
+    * is hit — the driver can never be asked to hold an arbitrarily large
+    * build side.
     */
   final case class Config(
       k: Int = 8,
@@ -67,93 +74,106 @@ object KnnJoin {
       boundaryCheck: String = "none",
       maxBroadcastRows: Long = 4000000L)
 
-  case class BuildRow(cell: Long, cx: Double, cy: Double, cz: Double,
-                      value: Double, id: Long)
-  case class ProbeRow(cell: Long, qid: Long, cx: Double, cy: Double,
-                      cz: Double)
+  /** One observation of the build side: tree position `c` (ECEF when
+    * geodetic), its value, error variance (0 unless the face reads a
+    * `sigma2` column) and id, and its unsalted `cell` (0 on the broadcast
+    * path).
+    */
+  case class BuildRow(cell: Long, c: Array[Double], value: Double,
+                      sigma2: Double, id: Long)
+  case class ProbeRow(cell: Long, qid: Long, c: Array[Double])
+
   /** `exact` is the shuffle path's self-check (SURVEY §7.4): true when
-    * the k-th neighbor ball provably fits inside the probe's 3x3 cell
-    * block, so the block-local answer equals the global answer; always
-    * true on the broadcast path. Callers can requery flagged rows at a
-    * coarser precision.
+    * the searched ball (the k-th neighbor distance, or `radius` when
+    * fewer than k points lie within it) provably fits inside the probe's
+    * 3x3 cell block, so the block-local answer equals the global answer;
+    * always true on the broadcast path. Callers can requery flagged rows
+    * at a coarser precision.
     */
   case class KnnNeighbors(qid: Long, dists: Array[Double],
                           values: Array[Double], ids: Array[Long], n: Int,
                           exact: Boolean)
 
-  /** Core: neighbors per probe point.
-    *
-    * @param build DataFrame with columns (x, y, value, id); x/y are
-    *              lon/lat when geodetic
-    * @param probe DataFrame with columns (qid, x, y)
-    * @return Dataset[KnnNeighbors]
+  /** Probe point + neighbor coordinates/values/error variances, for the
+    * solvers that need positions (RBF, kriging, OI). `exact` has the same
+    * block-cover meaning as [[KnnNeighbors.exact]].
     */
-  /** Typed build side: cell-encoded at `prec`, ECEF when geodetic. */
-  private def toBuildTyped(spark: SparkSession, build: DataFrame,
-      geodetic: Boolean, prec: Int): Dataset[BuildRow] = {
-    import spark.implicits._
-    build
-      .select(col("x").cast("double"), col("y").cast("double"),
-        col("value").cast("double"), col("id").cast("long"))
-      .as[(Double, Double, Double, Long)]
-      .map { case (x, y, v, id) =>
-        val (cx, cy, cz) =
-          if (geodetic) Geodesy.llaToEcef(x, y, 0.0) else (x, y, 0.0)
-        BuildRow(GeoHash.encode(x, y, prec), cx, cy, cz, v, id)
-      }
-  }
+  case class NbrWithCoords(qid: Long, q: Array[Double],
+                           coords: Array[Array[Double]],
+                           values: Array[Double], sigma2: Array[Double],
+                           exact: Boolean)
 
-  private def toProbeTyped(spark: SparkSession, probe: DataFrame,
-      geodetic: Boolean, prec: Int): Dataset[ProbeRow] = {
-    import spark.implicits._
-    probe
-      .select(col("qid").cast("long"), col("x").cast("double"),
-        col("y").cast("double"))
-      .as[(Long, Double, Double)]
-      .map { case (qid, x, y) =>
-        val (cx, cy, cz) =
-          if (geodetic) Geodesy.llaToEcef(x, y, 0.0) else (x, y, 0.0)
-        ProbeRow(GeoHash.encode(x, y, prec), qid, cx, cy, cz)
-      }
-  }
-
-  /** Build rows keyed by every salted cell of their 3x3 block (the border-
-    * replication that makes block-local answers globally correct).
+  /** Where the shuffle path puts a point: the cell of its first two raw
+    * coordinates, the 3x3 block of cells around a cell, and whether a ball
+    * of radius `d` around a probe provably stays inside its block.
     */
-  private def replicateSalted(spark: SparkSession, buildTyped: Dataset[BuildRow],
-      prec: Int, salt: Int): Dataset[(Long, BuildRow)] = {
-    import spark.implicits._
-    buildTyped.flatMap { b =>
-      val nbrs = GeoHash.neighbors(b.cell, prec)
-      (Iterator.single(b) ++ nbrs.iterator.map(c => b.copy(cell = c)))
-        .flatMap { r =>
-          (0 until salt).iterator.map(s => (r.cell * salt + s, r))
-        }
-    }
+  private[operators] sealed trait CellSpace extends Serializable {
+    def cell(a: Double, b: Double): Long
+    def block(cell: Long): Iterator[Long]
+    def ballInside(p: ProbeRow, d: Double): Boolean
   }
 
-  private def saltProbes(spark: SparkSession, probeTyped: Dataset[ProbeRow],
-      salt: Int): Dataset[(Long, ProbeRow)] = {
-    import spark.implicits._
-    probeTyped.map { p =>
-      val s = if (salt == 1) 0 else (p.qid % salt).toInt
-      (p.cell * salt + s, p)
-    }
+  /** GeoHash cells of (x, y) — lon/lat when geodetic. */
+  private[operators] final case class GeoHashCells(precision: Int,
+      geodetic: Boolean) extends CellSpace {
+    def cell(x: Double, y: Double): Long = GeoHash.encode(x, y, precision)
+    def block(cell: Long): Iterator[Long] =
+      Iterator.single(cell) ++ GeoHash.neighbors(cell, precision).iterator
+    def ballInside(p: ProbeRow, d: Double): Boolean =
+      ballInsideBlock(p, d, precision, geodetic)
+  }
+
+  /** A `size` grid on (x1, x2), keyed ((ix·P + iy)·P). A neighbor's key is
+    * the cell's plus (dx·P + dy)·P: exact in wrapping Long arithmetic.
+    * Claims no exactness (the 4-D faces report none).
+    */
+  private[operators] final case class GridCells(size: Double)
+      extends CellSpace {
+    private final val P = 2097169L
+    def cell(x1: Double, x2: Double): Long =
+      (math.floor(x1 / size).toLong * P + math.floor(x2 / size).toLong) * P
+    def block(cell: Long): Iterator[Long] =
+      for (dx <- Iterator(-1L, 0L, 1L); dy <- Iterator(-1L, 0L, 1L))
+        yield cell + (dx * P + dy) * P
+    def ballInside(p: ProbeRow, d: Double): Boolean = false
+  }
+
+  /** What a face searches: its coordinate columns (the first two key the
+    * cell space), the optional per-row error-variance column, whether
+    * (x, y) are lon/lat ranked in ECEF, the broadcast gate, the probe salt
+    * and — evaluated on the shuffle path only — its cell space.
+    */
+  private[operators] final case class Search(coords: Seq[String],
+      sigma2: Option[String], geodetic: Boolean, broadcastThreshold: Long,
+      maxBroadcastRows: Long, saltFactor: Int, cells: () => CellSpace)
+
+  private def search2d(cfg: Config): Search =
+    Search(Seq("x", "y"), None, cfg.geodetic, cfg.broadcastThreshold,
+      cfg.maxBroadcastRows, cfg.saltFactor,
+      () => GeoHashCells(cfg.precision, cfg.geodetic))
+
+  /** A searched block: the k-d tree over the block's build rows and their
+    * error variances, both indexed by build position.
+    */
+  private[operators] final class Block(rows: Array[BuildRow], dims: Int)
+      extends Serializable {
+    val tree: KdTree =
+      KdTree.build(rows.iterator.map(r => (r.c, r.value, r.id)), dims)
+    val sigma2: Array[Double] = rows.map(_.sigma2)
   }
 
   /** Broadcast-vs-shuffle choice WITHOUT a counting scan: thresholds 0 /
     * Long.MaxValue force a path outright; otherwise the decision uses
-    * Catalyst's optimizer size estimate (file statistics — no job), at a
-    * conservative ~32 bytes per (x, y, value, id) row. A full `count()`
-    * here would read the entire 100-TB build side before any work.
+    * Catalyst's optimizer size estimate (file statistics — no job) at
+    * `rowBytes` per build row. A full `count()` here would read the
+    * entire 100-TB build side before any work.
     */
-  private def useBroadcast(build: DataFrame, cfg: Config): Boolean =
-    if (cfg.broadcastThreshold <= 0L) false
-    else if (cfg.broadcastThreshold == Long.MaxValue) true
-    else {
-      val bytes = build.queryExecution.optimizedPlan.stats.sizeInBytes
-      bytes <= BigInt(cfg.broadcastThreshold) * 32
-    }
+  private def useBroadcast(build: DataFrame, threshold: Long,
+      rowBytes: Long): Boolean =
+    if (threshold <= 0L) false
+    else if (threshold == Long.MaxValue) true
+    else build.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      BigInt(threshold) * rowBytes
 
   /** Hard safety cap behind the no-scan estimate: collect at most cap+1
     * rows. If the limit is hit the estimate undershot (post-filter
@@ -161,8 +181,7 @@ object KnnJoin {
     * When fewer than cap+1 rows come back they ARE the complete build side
     * (the limit was not the binding constraint), so no second scan runs.
     */
-  private[operators] def collectCapped[T](ds: Dataset[T], cap: Long)
-      : Option[Array[T]] = {
+  private def collectCapped[T](ds: Dataset[T], cap: Long): Option[Array[T]] = {
     val lim = math.min(cap, Int.MaxValue.toLong - 2L).toInt
     // cheap overflow probe first (r3 ADVICE): counting limit(cap+1) keeps
     // the up-to-cap+1 overflow rows on an executor, not as a transient
@@ -172,74 +191,138 @@ object KnnJoin {
     if (n > lim) None else Some(ds.limit(lim + 1).collect())
   }
 
+  /** Tree position of raw coordinates: ECEF for geodetic lon/lat. */
+  private def position(raw: Array[Double], geodetic: Boolean)
+      : Array[Double] =
+    if (!geodetic) raw
+    else {
+      val (a, b, c) = Geodesy.llaToEcef(raw(0), raw(1), 0.0)
+      Array(a, b, c)
+    }
+
+  private def coordsOf(r: Row, from: Int, n: Int): Array[Double] =
+    Array.tabulate(n)(i => r.getDouble(from + i))
+
+  private def buildRows(spark: SparkSession, build: DataFrame, s: Search,
+      cell: (Double, Double) => Long): Dataset[BuildRow] = {
+    import spark.implicits._
+    val n = s.coords.size
+    val geodetic = s.geodetic
+    val hasSigma2 = s.sigma2.isDefined
+    build.select((s.coords.map(col(_).cast("double")) ++
+        (col("value") +: s.sigma2.map(col).toSeq).map(_.cast("double")) :+
+        col("id").cast("long")): _*)
+      .map { r =>
+        val raw = coordsOf(r, 0, n)
+        BuildRow(cell(raw(0), raw(1)), position(raw, geodetic),
+          r.getDouble(n), if (hasSigma2) r.getDouble(n + 1) else 0.0,
+          r.getLong(r.length - 1))
+      }
+  }
+
+  private def probeRows(spark: SparkSession, probe: DataFrame, s: Search,
+      cell: (Double, Double) => Long): Dataset[ProbeRow] = {
+    import spark.implicits._
+    val n = s.coords.size
+    val geodetic = s.geodetic
+    probe.select(col("qid").cast("long") +:
+        s.coords.map(col(_).cast("double")): _*)
+      .map { r =>
+        val raw = coordsOf(r, 1, n)
+        ProbeRow(cell(raw(0), raw(1)), r.getLong(0), position(raw, geodetic))
+      }
+  }
+
+  /** The one search core behind every face: `answer(block, probe,
+    * inBlock)` answers one probe from the block it searched, where
+    * `inBlock(d)` tells whether a ball of radius `d` around the probe lies
+    * inside that block (always on the broadcast path, whose block is the
+    * whole build side).
+    *
+    * Broadcast path: the build side is collected under the hard cap and
+    * every partition probes one shared tree. Shuffle path (or a capped
+    * collect that overflowed): build rows are replicated to their 3x3 cell
+    * block and every salt bucket, probes go to one salt bucket of their
+    * cell, and each cogrouped (cell, salt) group builds its own tree.
+    */
+  private[operators] def search[R: Encoder](spark: SparkSession,
+      build: DataFrame, probe: DataFrame, s: Search)(
+      answer: (Block, ProbeRow, Double => Boolean) => Iterator[R])
+      : Dataset[R] = {
+    import spark.implicits._
+    val dims = if (s.geodetic) 3 else s.coords.size
+    val noCell = (_: Double, _: Double) => 0L
+    val rowBytes = 8L * (s.coords.size + 2 + s.sigma2.size)
+    val collected =
+      if (useBroadcast(build, s.broadcastThreshold, rowBytes))
+        collectCapped(buildRows(spark, build, s, noCell), s.maxBroadcastRows)
+      else None
+    collected match {
+      case Some(rows) =>
+        val bc = spark.sparkContext.broadcast(new Block(rows, dims))
+        probeRows(spark, probe, s, noCell).mapPartitions { it =>
+          val b = bc.value
+          it.flatMap(p => answer(b, p, _ => true))
+        }
+      case None =>
+        val cells = s.cells()
+        val salt = math.max(1, s.saltFactor)
+        val replicated = buildRows(spark, build, s, cells.cell).flatMap { b =>
+          cells.block(b.cell).flatMap { c =>
+            (0 until salt).iterator.map(i => (c * salt + i, b))
+          }
+        }
+        val salted = probeRows(spark, probe, s, cells.cell).map { p =>
+          (p.cell * salt + Math.floorMod(p.qid, salt.toLong), p)
+        }
+        replicated.groupByKey(_._1)
+          .cogroup(salted.groupByKey(_._1)) { (_, bIt, pIt) =>
+            val probes = pIt.map(_._2).toArray
+            if (probes.isEmpty) Iterator.empty
+            else {
+              val b = new Block(bIt.map(_._2).toArray, dims)
+              probes.iterator.flatMap(p =>
+                answer(b, p, d => cells.ballInside(p, d)))
+            }
+          }
+    }
+  }
+
+  /** Radius of the ball a k-nearest answer searched: the k-th distance,
+    * or the query radius when fewer than k points lie within it.
+    */
+  private def searched(res: Array[(Double, Int)], k: Int,
+      radius: Double): Double =
+    if (res.length >= k) res(res.length - 1)._1 else radius
+
+  /** Core: k nearest neighbors per probe point.
+    *
+    * @param build DataFrame with columns (x, y, value, id); x/y are
+    *              lon/lat when geodetic
+    * @param probe DataFrame with columns (qid, x, y)
+    * @return Dataset[KnnNeighbors]
+    */
   def neighbors(spark: SparkSession, build: DataFrame, probe: DataFrame,
                 cfg: Config): Dataset[KnnNeighbors] = {
     import spark.implicits._
-    val dims = if (cfg.geodetic) 3 else 2
-    val geodetic = cfg.geodetic
-    val prec = cfg.precision
-
-    val buildTyped = toBuildTyped(spark, build, geodetic, prec)
-    val probeTyped = toProbeTyped(spark, probe, geodetic, prec)
-
-    val collected =
-      if (useBroadcast(build, cfg))
-        collectCapped(buildTyped, cfg.maxBroadcastRows)
-      else None
-    if (collected.isDefined) {
-      // broadcast path: zero shuffle, every partition probes a shared tree
-      val pts = collected.get
-      val tree = KdTree.build(pts.iterator.map { b =>
-        (if (dims == 3) Array(b.cx, b.cy, b.cz) else Array(b.cx, b.cy),
-          b.value, b.id)
-      }, dims)
-      val bc = spark.sparkContext.broadcast(tree)
-      val k = cfg.k
-      val radius = cfg.radius
-      probeTyped.mapPartitions { iter =>
-        val t = bc.value
-        iter.map { p =>
-          val q = if (dims == 3) Array(p.cx, p.cy, p.cz) else Array(p.cx, p.cy)
-          val res = t.query(q, k, radius)
-          KnnNeighbors(p.qid, res.map(_._1), res.map(_._2), res.map(_._3),
-            res.length, exact = true)
-        }
-      }
-    } else {
-      // shuffle path: build replicated to 3x3 neighborhood, cogroup by
-      // (cell, salt); salting splits hot cells across saltFactor tasks
-      val k = cfg.k
-      val radius = cfg.radius
-      val salt = math.max(1, cfg.saltFactor)
-      val replicated = replicateSalted(spark, buildTyped, prec, salt)
-      val saltedProbe = saltProbes(spark, probeTyped, salt)
-      replicated.groupByKey(_._1)
-        .cogroup(saltedProbe.groupByKey(_._1)) { (_, bIt, pIt) =>
-          val bIter = bIt.map(_._2)
-          val pIter = pIt.map(_._2)
-          val probes = pIter.toArray
-          if (probes.isEmpty) Iterator.empty
-          else {
-            val tree = KdTree.build(bIter.map { b =>
-              (if (dims == 3) Array(b.cx, b.cy, b.cz) else Array(b.cx, b.cy),
-                b.value, b.id)
-            }, dims)
-            if (tree.size == 0)
-              probes.iterator.map(p => KnnNeighbors(p.qid,
-                Array.empty, Array.empty, Array.empty, 0, exact = false))
-            else probes.iterator.map { p =>
-              val q = if (dims == 3) Array(p.cx, p.cy, p.cz)
-                else Array(p.cx, p.cy)
-              val res = tree.query(q, k, radius)
-              val isExact = res.length >= k &&
-                KnnJoin.ballInsideBlock(p, res(res.length - 1)._1, prec,
-                  geodetic, salt)
-              KnnNeighbors(p.qid, res.map(_._1), res.map(_._2),
-                res.map(_._3), res.length, isExact)
-            }
-          }
-        }
+    val k = cfg.k
+    val radius = cfg.radius
+    search(spark, build, probe, search2d(cfg)) { (b, p, inBlock) =>
+      val res = b.tree.nearest(p.c, k, radius)
+      Iterator.single(KnnNeighbors(p.qid, res.map(_._1),
+        res.map(r => b.tree.value(r._2)), res.map(r => b.tree.id(r._2)),
+        res.length, inBlock(searched(res, k, radius))))
     }
+  }
+
+  /** k nearest neighbors with their coordinates and error variances. */
+  private[operators] def nearestWithCoords(k: Int, radius: Double)(
+      b: Block, p: ProbeRow, inBlock: Double => Boolean)
+      : Iterator[NbrWithCoords] = {
+    val res = b.tree.nearest(p.c, k, radius)
+    Iterator.single(NbrWithCoords(p.qid, p.c,
+      res.map(r => b.tree.point(r._2)), res.map(r => b.tree.value(r._2)),
+      res.map(r => b.sigma2(r._2)), inBlock(searched(res, k, radius))))
   }
 
   /** Conservative exactness test for the shuffle path: the ball of the
@@ -247,8 +330,8 @@ object KnnJoin {
     * 3x3 cell block. Geodetic chord distances are converted to degree
     * margins with a safety factor.
     */
-  private[operators] def ballInsideBlock(p: ProbeRow, dK: Double,
-      precision: Int, geodetic: Boolean, salt: Int): Boolean = {
+  private def ballInsideBlock(p: ProbeRow, dK: Double, precision: Int,
+      geodetic: Boolean): Boolean = {
     // p.cell carries the original (unsalted) cell id
     val (x0, y0, x1, y1) = GeoHash.boundingBox(p.cell, precision)
     val (lonErr, latErr) = GeoHash.errorWithPrecision(precision)
@@ -257,8 +340,8 @@ object KnnJoin {
     val by0 = y0 - latErr
     val by1 = y1 + latErr
     if (!geodetic) {
-      p.cx - dK >= bx0 && p.cx + dK <= bx1 &&
-        p.cy - dK >= by0 && p.cy + dK <= by1
+      p.c(0) - dK >= bx0 && p.c(0) + dK <= bx1 &&
+        p.c(1) - dK >= by0 && p.c(1) + dK <= by1
     } else {
       // chord meters -> degree margins (conservative 1.05 factor; lon
       // margin uses the widest latitude in the block). NOTE: near the
@@ -266,7 +349,7 @@ object KnnJoin {
       // conservatively FALSE and polar probes re-query coarser —
       // correct but wasteful; a polar-cap cell scheme would fix the
       // waste if polar workloads ever dominate
-      val (lon, lat, _) = Geodesy.ecefToLla(p.cx, p.cy, p.cz)
+      val (lon, lat, _) = Geodesy.ecefToLla(p.c(0), p.c(1), p.c(2))
       val latMargin = dK / 110574.0 * 1.05
       val maxAbsLat = math.min(89.9, math.max(math.abs(by0), math.abs(by1)))
       val lonMargin = dK /
@@ -291,63 +374,14 @@ object KnnJoin {
                    radius: Double, cfg: Config,
                    maxAbsLat: Double = 80.0): DataFrame = {
     import spark.implicits._
-    val dims = if (cfg.geodetic) 3 else 2
-    val geodetic = cfg.geodetic
-    val collected =
-      if (useBroadcast(build, cfg))
-        collectCapped(build
-          .select(col("x").cast("double"), col("y").cast("double"),
-            col("value").cast("double"), col("id").cast("long"))
-          .as[(Double, Double, Double, Long)], cfg.maxBroadcastRows)
-      else None
-    if (collected.isDefined) {
-      val pts = collected.get
-      val tree = KdTree.build(pts.iterator.map { case (x, y, v, id) =>
-        (if (geodetic) { val (a, b, c) = Geodesy.llaToEcef(x, y, 0.0)
-          Array(a, b, c) } else Array(x, y), v, id)
-      }, dims)
-      val bc = spark.sparkContext.broadcast(tree)
-      probe.select(col("qid").cast("long"), col("x").cast("double"),
-          col("y").cast("double"))
-        .as[(Long, Double, Double)]
-        .flatMap { case (qid, x, y) =>
-          val q = if (geodetic) {
-            val (a, b, c) = Geodesy.llaToEcef(x, y, 0.0); Array(a, b, c)
-          } else Array(x, y)
-          bc.value.queryBall(q, radius).iterator
-            .map(r => (qid, r._3, r._1, r._2))
-        }
-        .toDF("qid", "nid", "dist", "value")
-    } else {
-      val prec = radiusSafePrecision(radius, cfg.precision, geodetic,
-        maxAbsLat)
-      val salt = math.max(1, cfg.saltFactor)
-      val replicated = replicateSalted(spark,
-        toBuildTyped(spark, build, geodetic, prec), prec, salt)
-      val saltedProbe = saltProbes(spark,
-        toProbeTyped(spark, probe, geodetic, prec), salt)
-      replicated.groupByKey(_._1)
-        .cogroup(saltedProbe.groupByKey(_._1)) { (_, bIt, pIt) =>
-          val probes = pIt.map(_._2).toArray
-          if (probes.isEmpty) Iterator.empty
-          else {
-            val tree = KdTree.build(bIt.map(_._2).map { b =>
-              (if (dims == 3) Array(b.cx, b.cy, b.cz) else Array(b.cx, b.cy),
-                b.value, b.id)
-            }, dims)
-            if (tree.size == 0) Iterator.empty
-            else probes.iterator.flatMap { p =>
-              val q = if (dims == 3) Array(p.cx, p.cy, p.cz)
-                else Array(p.cx, p.cy)
-              tree.queryBall(q, radius).iterator
-                .map(r => (p.qid, r._3, r._1, r._2))
-            }
-          }
-        }
-        .toDF("qid", "nid", "dist", "value")
-    }
+    val s = search2d(cfg).copy(cells = () => GeoHashCells(
+      radiusSafePrecision(radius, cfg.precision, cfg.geodetic, maxAbsLat),
+      cfg.geodetic))
+    search(spark, build, probe, s) { (b, p, _) =>
+      b.tree.queryBall(p.c, radius).iterator
+        .map(r => (p.qid, r._3, r._1, r._2))
+    }.toDF("qid", "nid", "dist", "value")
   }
-
   /** Coarsest-enough precision so a `radius` ball around any probe point
     * stays inside its 3x3 cell block. Precision steps by 2 bits (lon/lat
     * interleave); throws when even the 4-cell globe cannot contain the
@@ -520,9 +554,7 @@ object KnnJoin {
           epsilon: Double = Double.NaN, smooth: Double = 0.0): DataFrame = {
     import spark.implicits._
     val dims = if (cfg.geodetic) 3 else 2
-    val geodetic = cfg.geodetic
-    val withCoords = neighborsWithCoords(spark, build, probe, cfg)
-    withCoords.map { r =>
+    neighborsWithCoords(spark, build, probe, cfg).map { r =>
       val v = RbfSolver.interpolate(r.q, r.coords, r.values, kernel, epsilon,
         smooth, dims)
       (r.qid, v, r.coords.length)
@@ -568,85 +600,14 @@ object KnnJoin {
     }.toDF("qid", "value", "error_variance", "neighbors")
   }
 
-  /** Probe point + neighbor coordinates/values, for the solvers that need
-    * positions (RBF, kriging, OI). `exact` has the same block-cover meaning
-    * as [[KnnNeighbors.exact]].
-    */
-  case class NbrWithCoords(qid: Long, q: Array[Double],
-                           coords: Array[Array[Double]],
-                           values: Array[Double], exact: Boolean)
-
-  /** kNN with neighbor coordinates: broadcast tree when the build side is
-    * small, else the same 3x3-replicated cell cogroup as [[neighbors]]
-    * (the coordinates ride the existing shuffle — nothing is collected).
+  /** kNN with neighbor coordinates: the coordinates ride the shuffle
+    * path's cogroup — nothing is collected above the broadcast gate.
     */
   private def neighborsWithCoords(spark: SparkSession, build: DataFrame,
       probe: DataFrame, cfg: Config): Dataset[NbrWithCoords] = {
     import spark.implicits._
-    val dims = if (cfg.geodetic) 3 else 2
-    val geodetic = cfg.geodetic
-    val prec = cfg.precision
-    val k = cfg.k
-    val radius = cfg.radius
-    val collected =
-      if (useBroadcast(build, cfg))
-        collectCapped(build
-          .select(col("x").cast("double"), col("y").cast("double"),
-            col("value").cast("double"), col("id").cast("long"))
-          .as[(Double, Double, Double, Long)], cfg.maxBroadcastRows)
-      else None
-    if (collected.isDefined) {
-      val pts = collected.get
-      val tree = KdTree.build(pts.iterator.map { case (x, y, v, id) =>
-        (if (geodetic) { val (a, b, c) = Geodesy.llaToEcef(x, y, 0.0)
-          Array(a, b, c) } else Array(x, y), v, id)
-      }, dims)
-      val bc = spark.sparkContext.broadcast(tree)
-      probe.select(col("qid").cast("long"), col("x").cast("double"),
-          col("y").cast("double"))
-        .as[(Long, Double, Double)]
-        .mapPartitions { iter =>
-          val t = bc.value
-          iter.map { case (qid, x, y) =>
-            val q = if (geodetic) {
-              val (a, b, c) = Geodesy.llaToEcef(x, y, 0.0); Array(a, b, c)
-            } else Array(x, y)
-            val res = t.queryWithCoords(q, k, radius)
-            NbrWithCoords(qid, q, res.map(_._4), res.map(_._2), exact = true)
-          }
-        }
-    } else {
-      val salt = math.max(1, cfg.saltFactor)
-      val replicated = replicateSalted(spark,
-        toBuildTyped(spark, build, geodetic, prec), prec, salt)
-      val saltedProbe = saltProbes(spark,
-        toProbeTyped(spark, probe, geodetic, prec), salt)
-      replicated.groupByKey(_._1)
-        .cogroup(saltedProbe.groupByKey(_._1)) { (_, bIt, pIt) =>
-          val probes = pIt.map(_._2).toArray
-          if (probes.isEmpty) Iterator.empty
-          else {
-            val tree = KdTree.build(bIt.map(_._2).map { b =>
-              (if (dims == 3) Array(b.cx, b.cy, b.cz) else Array(b.cx, b.cy),
-                b.value, b.id)
-            }, dims)
-            probes.iterator.map { p =>
-              val q = if (dims == 3) Array(p.cx, p.cy, p.cz)
-                else Array(p.cx, p.cy)
-              if (tree.size == 0)
-                NbrWithCoords(p.qid, q, Array.empty, Array.empty,
-                  exact = false)
-              else {
-                val res = tree.queryWithCoords(q, k, radius)
-                val isExact = res.length >= k &&
-                  ballInsideBlock(p, res(res.length - 1)._1, prec, geodetic,
-                    salt)
-                NbrWithCoords(p.qid, q, res.map(_._4), res.map(_._2), isExact)
-              }
-            }
-          }
-        }
-    }
+    search(spark, build, probe, search2d(cfg))(
+      nearestWithCoords(cfg.k, cfg.radius))
   }
 }
 

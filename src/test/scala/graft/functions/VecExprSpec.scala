@@ -162,4 +162,54 @@ class VecExprSpec extends AnyFunSuite {
       assert(r.getSeq[Any](2) == r.getSeq[Any](3))
     }
   }
+  /** The exception a failed job surfaces, whatever Spark wraps it in. */
+  private def rootMessage(body: => Any): String = {
+    var t: Throwable = intercept[Exception](body)
+    while (t.getCause != null) t = t.getCause
+    s"${t.getClass.getSimpleName}: ${t.getMessage}"
+  }
+
+  test("CosineSimilarity throws on length-mismatched embeddings") {
+    val df = Seq((Array(1.0, 2.0, 3.0), Array(1.0, 2.0))).toDF("ea", "eb")
+    val msg = rootMessage(
+      df.select(Similarity.cosine(col("ea"), col("eb"))).collect())
+    assert(msg.contains("length-mismatched"), msg)
+  }
+
+  test("LshBucket throws on an embedding that is not dims long") {
+    val df = Seq((1L, Array(1.0f, 2.0f, 3.0f))).toDF("id", "embedding")
+    val msg = rootMessage(df.select(
+      Similarity.lshBucket(col("embedding"), 4, 2)).collect())
+    assert(msg.contains("3-element embedding"), msg)
+  }
+
+  test("MinhashFromHashes skips null elements like array_min") {
+    val hd = Seq((1L, Seq[java.lang.Long](7L, null, 9L)),
+        (2L, Seq[java.lang.Long](null, null)))
+      .toDF("id", "hashes")
+    val k = 4
+    val sig = hd.select(col("id"),
+        Dedup.minhashSignatureFromHashes(col("hashes"), k).as("s"),
+        Dedup.minhashSignatureFromHashes(
+          array_compact(col("hashes")), k).as("c"))
+      .collect().map(r => r.getLong(0) -> (r.getSeq[Any](1), r.getSeq[Any](2)))
+      .toMap
+    // nulls dropped == nulls never there; all-null == empty -> null slots
+    assert(sig(1L)._1 == sig(1L)._2 && !sig(1L)._1.contains(null))
+    assert(sig(2L)._1 == Seq.fill(k)(null) && sig(2L)._2 == sig(2L)._1)
+  }
+
+  test("n-gram Jaccard prunes empty-shingle pairs at every threshold") {
+    // "x" and "y" have no 2-gram: their pair has no defined Jaccard and is
+    // pruned; each one's self-pair must not fail the all-pairs scoring
+    val docs = Seq((1L, "x"), (2L, "y"), (3L, "a b c")).toDF("id", "text")
+    for (t <- Seq(-1.0, 0.0, 0.5)) {
+      val pairs = Dedup.ngramJaccardPairs(docs, "id", "text", shingleN = 2,
+          threshold = t, allPairs = true).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val want = if (t > 0.0) Set.empty[(Long, Long, Double)]
+        else Set((1L, 3L, 0.0), (2L, 3L, 0.0))
+      assert(pairs == want, s"threshold $t")
+    }
+  }
 }
